@@ -130,8 +130,10 @@ def _converged_star_roots(
 ) -> DataFrame:
     """Run the star alternation on materialized (u, v) edges until the star
     forest fixpoint; returns (u, v) = (node, root) rows, localCheckpointed in
-    the CALLER's session. ``e`` must be materialized (localCheckpointed) —
-    the loop must never re-evaluate an arbitrary upstream plan.
+    the CALLER's session. Raises ``RuntimeError`` when ``max_iter`` rounds end
+    short of the fixpoint: an unconverged forest is not a clustering. ``e``
+    must be materialized (localCheckpointed) — the loop must never
+    re-evaluate an arbitrary upstream plan.
 
     The loop runs in a CHILD session (same SparkContext, private SQL conf):
     shuffle sizing and the AQE toggle below must not leak into — or race
@@ -176,6 +178,10 @@ def _converged_star_roots(
                 e = e.localCheckpoint()
             if _is_star_forest(e):
                 break
+        else:
+            raise RuntimeError(
+                f"connected components did not converge in {max_iter} rounds"
+            )
         # hand the converged star forest back to the caller's session,
         # materialized there BEFORE the finally block drops the temp views —
         # the returned plan must not reference a dropped view, and dropping

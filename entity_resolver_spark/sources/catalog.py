@@ -14,6 +14,16 @@ src/classifying.py:425-458) and tracks stage state in pipeline_state.json
 Per-partition lineage: alongside each table a ``_lineage`` table records
 (stage, partition_id, rows, committed_at_ns) so a resumed run can prove which
 partitions were produced by which stage run (north_rule requirement).
+
+In parquet mode a commit runs only its data write. The per-partition row
+counts (lineage and the returned stats) come from the committed files'
+parquet footers, not from a re-read of the table, and lineage / ``_metrics``
+rows are appended without a Spark job: one parquet file written by
+``pyarrow`` under a hidden name inside the table directory, then renamed
+into place (Spark lists no hidden file, so a reader sees the whole file or
+none of it). In Iceberg mode the counts come from one aggregate over the
+committed snapshot, and the rows are appended through ``writeTo``, creating
+the table only when it does not exist yet.
 """
 
 from __future__ import annotations
@@ -23,9 +33,43 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+# Column types of the bookkeeping tables. Older warehouses hold files that
+# Spark jobs appended with exactly these types, and resuming one mixes those
+# files with pyarrow-written ones in the same table, so the types must not
+# change.
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("stage", StringType()),
+        StructField("partition_id", IntegerType()),
+        StructField("rows", LongType()),
+        StructField("committed_at_ns", LongType()),
+    ]
+)
+METRICS_SCHEMA = StructType(
+    [
+        StructField("stage", StringType()),
+        StructField("payload", StringType()),
+        StructField("rows", LongType()),
+        StructField("wall_ms", DoubleType()),
+        StructField("at_ns", LongType()),
+    ]
+)
 
 
 def iceberg_available(spark: SparkSession, catalog: str | None = None) -> bool:
@@ -43,6 +87,32 @@ def iceberg_available(spark: SparkSession, catalog: str | None = None) -> bool:
         except Exception:
             return False
     return False
+
+
+def _footer_counts(path: str) -> Counter:
+    """{_pid: rows} of a committed parquet table directory, from the part
+    files' footers: a row group whose ``_pid`` statistics have min == max
+    holds that one partition; any other row group has its ``_pid`` column
+    read. Hidden and ``_``-prefixed files (``_SUCCESS``, checksums) are not
+    data, as for Spark's own listing."""
+    counts: Counter = Counter()
+    for name in os.listdir(path):
+        if name.startswith((".", "_")):
+            continue
+        pf = pq.ParquetFile(os.path.join(path, name))
+        md = pf.metadata
+        col = next(
+            j for j in range(md.num_columns) if md.schema.column(j).path == "_pid"
+        )
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            st = rg.column(col).statistics
+            if st is not None and st.has_min_max and st.min == st.max:
+                counts[st.min] += rg.num_rows
+            else:
+                pids = pf.read_row_group(i, columns=["_pid"]).column(0)
+                counts.update(pids.to_pylist())
+    return counts
 
 
 class Warehouse:
@@ -73,6 +143,10 @@ class Warehouse:
         if self.use_iceberg:
             with_pid.writeTo(self._ident(table)).createOrReplace()
             committed = self.spark.read.table(self._ident(table))
+            counts = {
+                r["_pid"]: r["count"]
+                for r in committed.groupBy("_pid").count().collect()
+            }
         else:
             tmp = self._path(f"_tmp_{table}_{uuid.uuid4().hex[:8]}")
             with_pid.write.mode("overwrite").parquet(tmp)
@@ -90,51 +164,56 @@ class Warehouse:
             os.rename(tmp, final)
             if os.path.exists(old):
                 shutil.rmtree(old)
-            committed = self.spark.read.parquet(final)
-        lineage = (
-            committed.groupBy("_pid")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(table))
-            .withColumn("committed_at_ns", F.lit(time.time_ns()))
-            .select("stage", F.col("_pid").alias("partition_id"), "rows", "committed_at_ns")
+            counts = _footer_counts(final)
+        at_ns = time.time_ns()
+        self._append(
+            "_lineage",
+            [
+                {"stage": table, "partition_id": pid, "rows": n, "committed_at_ns": at_ns}
+                for pid, n in sorted(counts.items())
+            ],
+            LINEAGE_SCHEMA,
         )
-        self._append("_lineage", lineage)
-        stats = committed.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("_pid").alias("parts"),
-        ).collect()[0]
         return {
-            "rows": stats["rows"],
-            "partitions": stats["parts"],
+            "rows": sum(counts.values()),
+            "partitions": len(counts),
             "wall_ms": int((time.monotonic() - t0) * 1000),
         }
 
-    def _append(self, table: str, df: DataFrame) -> None:
+    def _append(self, table: str, rows: list[dict], schema: StructType) -> None:
+        """Append driver-side ``rows`` (dicts keyed by ``schema``'s fields)."""
         if self.use_iceberg:
-            try:
-                df.writeTo(self._ident(table)).append()
-            except Exception:
-                df.writeTo(self._ident(table)).createOrReplace()
-        else:
-            df.write.mode("append").parquet(self._path(table))
+            df = self.spark.createDataFrame(rows, schema)
+            ident = self._ident(table)
+            if self.spark.catalog.tableExists(ident):
+                df.writeTo(ident).append()
+            else:
+                df.writeTo(ident).create()
+            return
+        path = self._path(table)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, "." + name)
+        pq.write_table(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), tmp)
+        os.rename(tmp, os.path.join(path, name))
 
     def append_metrics(self, rows: list[dict]) -> None:
         """Append stage-metrics rows to the `_metrics` table (the reference's
         telemetry sink, src/classifying.py:460-483, as a table not JSON)."""
-        df = self.spark.createDataFrame(
+        self._append(
+            "_metrics",
             [
-                (
-                    r["stage"],
-                    json.dumps(r, default=str),
-                    int(r.get("rows", -1)),
-                    float(r.get("wall_ms", -1)),
-                    time.time_ns(),
-                )
+                {
+                    "stage": r["stage"],
+                    "payload": json.dumps(r, default=str),
+                    "rows": int(r.get("rows", -1)),
+                    "wall_ms": float(r.get("wall_ms", -1)),
+                    "at_ns": time.time_ns(),
+                }
                 for r in rows
             ],
-            schema="stage string, payload string, rows long, wall_ms double, at_ns long",
+            METRICS_SCHEMA,
         )
-        self._append("_metrics", df)
 
     # -- reads ------------------------------------------------------------
     def exists(self, table: str) -> bool:

@@ -46,6 +46,18 @@ def test_connected_components_empty(spark):
     assert connected_components(df).count() == 0
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """A path needs about log2(n) star rounds; one round must fail loudly,
+    not return the half-merged forest as components, and must still drop
+    the loop's global temp views."""
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(200)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iter=1)
+    views = [t.name for t in spark.catalog.listTables("global_temp")]
+    assert not [v for v in views if v.startswith("er_cc_")]
+
+
 def test_cluster_records_appends_singletons(spark):
     records = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["conv_id"])
     scored = spark.createDataFrame(
