@@ -19,76 +19,14 @@ TF_DIM = 512
 
 # MinHash-LSH: n_hashes = bands * rows_per_band. Jaccard-similar texts collide
 # in >=1 band w.h.p.; replaces the reference's Weaviate ANN stage
-# (src/classifying.py:1663-1833, cosine distance <= 0.18).
+# (src/classifying.py:1663-1833, cosine distance <= 0.18). The blocking
+# signature runs over the RARE_SHINGLE_K distinct-shingle table below.
 MINHASH_HASHES = 16
 MINHASH_BANDS = 8  # rows_per_band = 2 -> catches moderate Jaccard overlap
 
-# Name-gram LSH: 4 bands x 6 rows. Targets typo-level char-3-gram Jaccard
-# (s>=0.8 -> p>=0.72); lower-similarity name pairs (initials, double errors)
-# are covered by the SNM/initials/soundex passes. Tightened twice on audit
-# data (scripts/blocking_audit.py): r1's 8x3 emitted 85% of all pairs for
-# 0.007 marginal recall; the r2 6x4 setting still emitted 3.35M UNIQUE pairs
-# of a 5.74M union at the 24k-entity corpus for 0.005 marginal recall —
-# same-surname families (s~0.45) collide at p~0.22 with 4-row bands but only
-# p~0.033 with 6-row bands. Family-collision volume grows superlinearly with
-# corpus size, so this matters more at scale, and the recall it carried is
-# bought back linearly by the wider SNM window below (bench-corpus strict F1
-# 0.9907 -> 0.9911 at 31% fewer candidate pairs at 24k).
-NAME_LSH_HASHES = 24
-NAME_LSH_BANDS = 4
-
-# Word-shingle width for MinHash (3-grams over normalized tokens).
+# Word-shingle width for the KMV text_jaccard sketch (3-grams over
+# normalized tokens).
 SHINGLE_K = 3
-
-# Sorted-neighborhood window (pairs within `window/2` GLOBAL ranks of each
-# other under the name sort are candidates; ranks via range-partitioned
-# global rank, blocking.py _global_rank). SNM volume is LINEAR in window x
-# corpus, unlike LSH family collisions, so each name-LSH tightening was paid
-# for here: 8 -> 16 (r2) -> 24 (with 4-row->6-row name-LSH bands).
-SNM_WINDOW = 24
-
-# Which blocking passes run (audit-driven defaults — see
-# scripts/blocking_audit.py + scripts/prune_eval.py, recorded in
-# BENCH/BASELINE.md). Every pass stays implemented and tested; the DEFAULT
-# profile keeps only passes whose marginal recall pays for their unique-pair
-# volume, because every junk candidate is Jaro-Winkler + cosine work
-# downstream. Whole-profile eval (r4): at 72k entities / 359,599 true pairs,
-# dropping SNM + name-LSH + soundex anchors cut candidates 29.05M -> 18.64M
-# (-36%) for blocking recall 0.98954 -> 0.98895 (-0.0006); at the 24k gate
-# corpus the same cut is recall-NEUTRAL (0.99903 either way) at -45% volume.
-# Dropping text-MinHash as well lost 7x more recall than it saved volume at
-# both scales, and tightening rare_shingle_max_df 6 -> 4 lost 1.2-2.2pp —
-# both stay on. Flip SNM / name-LSH back on for corpora where names are
-# absent or heavily mangled (they key on name ORDER and name CHARACTER
-# overlap respectively; this corpus's anchors + rare shingles already cover
-# those failure modes).
-SNM_ENABLED = False
-NAME_LSH_ENABLED = False
-MINHASH_TEXT_ENABLED = True
-# Derive the text-MinHash signature from the SAME materialized distinct-
-# shingle table the rare-shingle pass builds (k = RARE_SHINGLE_K), instead
-# of a second corpus scan + shingle build at SHINGLE_K. One text scan for
-# both passes; LSH recall measured identical at 24k (0.99971 both forms)
-# and the separate string-scan signature cost 73s of a ~210s blocking wall
-# at the 144k corpus. Flip off to restore the independent k=SHINGLE_K scan.
-MINHASH_UNIFIED_SCAN = True
-# Anchor-key families (blocking.py B5): subset of {"identity", "soundex",
-# "anagram"}. The anagram key already catches transposition typos AND is
-# swap-invariant where soundex breaks (see blocking.py B5 notes); soundex's
-# leave-one-out marginal recall at 72k measured 0.00001 for 755k extra pairs.
-ANCHOR_FORMS = ("identity", "anagram")
-
-# Emit the plain exact-name-hash key (x:) alongside the sorted-token key
-# (t:). The plain key is strictly subsumed by the sorted-token key pre-split
-# (equal name_key => equal sorted tokens), so it only adds coverage inside a
-# hot block whose EQUAL-NAME run exceeds the split cap — and the rank-ordered
-# split keeps equal names adjacent, making that case empty in practice:
-# measured at 24k entities (prune_eval r5), dropping it changes recall not at
-# all (0.99971 either way, the same 35 missed pairs) while removing one block
-# row per named record and the duplicate fan-out of every exact-name group
-# from the pair join. Default off; flip on for corpora with giant equal-name
-# runs AND a small split cap.
-EXACT_PLAIN_ENABLED = False
 
 # Bottom-k (KMV) shingle sketch carried per record into the pair-feature
 # battery: the k smallest xxhash64 values over the record's distinct word
@@ -101,42 +39,30 @@ EXACT_PLAIN_ENABLED = False
 # similarity. Estimator std ≈ sqrt(J(1-J)/k) ≈ 0.06 at J=0.5 with k=64.
 SHINGLE_SKETCH_K = 64
 
-# Rare-shingle inverted index (blocking pass B7): any distinct word shingle
-# with document frequency <= this cap is itself a block key. Near-dup texts
-# share rare shingles; the cap bounds junk at C(df, 2) pairs per shingle.
-# Measured at the 24k-entity corpus: recall of labeled true pairs
+# Rare-shingle inverted index (the ``r`` blocking pass): any distinct word
+# shingle with document frequency <= this cap is itself a block key. Near-dup
+# texts share rare shingles; the cap bounds junk at C(df, 2) pairs per
+# shingle. Measured at the 24k-entity corpus: recall of labeled true pairs
 # 0.9746 -> 0.9990 for +20% candidate volume (catches name-mangled records
-# no name pass can key). 0/1 disables.
+# no name pass can key). A cap <= 1 leaves no block, so the pass emits
+# nothing.
 RARE_SHINGLE_MAX_DF = 6
 
-# Per-record cap on rare-shingle block keys: keep only the K smallest shingle
-# HASHES per record (bottom-k under the shared global hash order — the KMV /
-# prefix-filtering construction). MEASURED TOO LOSSY AS A DEFAULT on this
-# corpus (24k entities: blocking recall 0.99971 uncapped -> 0.99082 at K=8,
-# 0.99626 at K=16): same-entity conversations are NOT near-duplicate texts —
-# they share only a few rare shingles, so a uniform per-record subset drops
-# exactly the shared ones. The knob stays for corpora of genuine near-dup
-# documents (copy-edit dedup), where bottom-k aligns across the pair.
-# 0 (default) = uncapped; volume control comes from member-set block
-# dedup in rare_shingle_blocks instead, which is exactly pair-preserving.
-RARE_SHINGLE_PER_RECORD = 0
-
 # Shingle length for the rare-shingle index — deliberately LONGER than
-# SHINGLE_K (which feeds the MinHash signatures and the KMV text_jaccard
-# sketch, both tuned for Jaccard estimation). Rarity must hold against
-# corpus growth: over a bounded vocabulary the df of every k-shingle grows
-# linearly with the corpus, so an absolute df cap silently strangles the
-# pass as data scales (measured: 3-shingles at df<=6 covered blocking
-# recall 0.989 at 252k records but only 0.945 at 504k — crowding-out, the
-# same pairs, the same cap). The scale-correct response is a LONGER
-# shingle, which restores per-shingle specificity at the SAME C(df, 2)
-# volume bound — raising the df cap instead buys less recall for more
-# pairs (504k records: k=4/df6 recall 0.99778 at 88 pairs/rec vs k=3/df12
-# 0.98592 at 105). Rule of thumb when scaling further: grow k until the
-# rare-shingle pass again covers >=90% of records with >=1 rare shingle;
-# k=4 survives the corpus's 12% token-dropout noise fine (a 4-shingle
-# survives both sides of a near-dup pair with p ~ 0.36 per occurrence,
-# and every conversation carries dozens of shingles).
+# SHINGLE_K (which feeds the KMV text_jaccard sketch, tuned for Jaccard
+# estimation). Rarity must hold against corpus growth: over a bounded
+# vocabulary the df of every k-shingle grows linearly with the corpus, so an
+# absolute df cap silently strangles the pass as data scales (measured:
+# 3-shingles at df<=6 covered blocking recall 0.989 at 252k records but only
+# 0.945 at 504k — crowding-out, the same pairs, the same cap). The
+# scale-correct response is a LONGER shingle, which restores per-shingle
+# specificity at the SAME C(df, 2) volume bound — raising the df cap instead
+# buys less recall for more pairs (504k records: k=4/df6 recall 0.99778 at 88
+# pairs/rec vs k=3/df12 0.98592 at 105). Rule of thumb when scaling further:
+# grow k until the rare-shingle pass again covers >=90% of records with >=1
+# rare shingle; k=4 survives the corpus's 12% token-dropout noise fine (a
+# 4-shingle survives both sides of a near-dup pair with p ~ 0.36 per
+# occurrence, and every conversation carries dozens of shingles).
 #
 # MEASURED BOUNDARY of the longer-shingle rule (r6, 288k entities /
 # 1.008M records): k=5 at df<=6 read blocking recall 0.99155 vs 0.99562
@@ -152,13 +78,13 @@ RARE_SHINGLE_K = 4
 # (and the pairs it forgoes) is recorded in stage metrics. A block of size B
 # emits B^2/2 pairs, so the cap bounds per-block pair fan-out quadratically
 # (64 -> <=2016 pairs). Genuine same-entity groups are far smaller than 64;
-# only junk buckets (stop-shingle LSH bands, hot SNM prefixes) exceed it —
+# only junk buckets (stop-shingle LSH bands, very common names) exceed it —
 # the reference's analogue is the ANN retrieval cap (config.yml:170-174).
 MAX_BLOCK_SIZE = 64
 
-# Decision threshold for match classification (reference config.yml:253
-# `decision_threshold: 0.56`; re-swept on the 3000-entity corpus after the
-# context-vector change).
+# Default decision threshold of operators/scoring.Model (reference
+# config.yml:253 `decision_threshold: 0.56`; re-swept on the 3000-entity
+# corpus after the context-vector change). Trained models carry their own.
 DECISION_THRESHOLD = 0.57
 
 # Minimum edge confidence for clustering (reference config.yml:234
@@ -285,20 +211,10 @@ class EngineConfig:
     tf_dim: int = TF_DIM
     minhash_hashes: int = MINHASH_HASHES
     minhash_bands: int = MINHASH_BANDS
-    name_lsh_hashes: int = NAME_LSH_HASHES
-    name_lsh_bands: int = NAME_LSH_BANDS
     shingle_k: int = SHINGLE_K
     shingle_sketch_k: int = SHINGLE_SKETCH_K
-    snm_window: int = SNM_WINDOW
-    snm_enabled: bool = SNM_ENABLED
-    name_lsh_enabled: bool = NAME_LSH_ENABLED
-    minhash_text_enabled: bool = MINHASH_TEXT_ENABLED
-    minhash_unified_scan: bool = MINHASH_UNIFIED_SCAN
-    anchor_forms: tuple = ANCHOR_FORMS
-    exact_plain_enabled: bool = EXACT_PLAIN_ENABLED
     rare_shingle_max_df: int = RARE_SHINGLE_MAX_DF
     rare_shingle_k: int = RARE_SHINGLE_K
-    rare_shingle_per_record: int = RARE_SHINGLE_PER_RECORD
     max_block_size: int = MAX_BLOCK_SIZE
     cc_reliable_every: int = CC_RELIABLE_EVERY
     enhancement_aggressiveness: str = ENHANCEMENT_AGGRESSIVENESS
@@ -306,7 +222,6 @@ class EngineConfig:
     broadcast_max_bytes: int = BROADCAST_MAX_BYTES
     broadcast_hard_max_records: int = BROADCAST_HARD_MAX_RECORDS
     broadcast_row_fixed_bytes: int = BROADCAST_ROW_FIXED_BYTES
-    decision_threshold: float = DECISION_THRESHOLD
     min_edge_confidence: float = MIN_EDGE_CONFIDENCE
     year_tolerance: int = YEAR_TOLERANCE
     feature_cols: list[str] = field(default_factory=lambda: list(FEATURE_COLS))

@@ -1,4 +1,4 @@
-"""Hashing primitives: content hashes, hashed-TF vectors, MinHash, SimHash.
+"""Hashing primitives: content hashes, hashed-TF vectors, MinHash, Hamming.
 
 Reference parity:
 * ``hash_string`` (xxh3-128 hex with empty->'NULL' sentinel,
@@ -144,23 +144,6 @@ def shingles_expr(tokens: Column, k: int) -> Column:
     return F.when(n >= k, windows).otherwise(F.array(F.concat_ws(" ", tokens)))
 
 
-def minhash_sig_expr(shingles: Column, n_hashes: int) -> Column:
-    """MinHash signature of a shingle array as a PURE EXPRESSION (one
-    ``aggregate`` computing all n hashes per element, folding elementwise
-    mins). No shuffle — but the fold is INTERPRETED, not codegen'd: measured
-    ~10x slower per element than the explode+groupBy form below. Use this
-    only where introducing a shuffle is genuinely worse than the CPU trade
-    (e.g. inside streaming stateless maps)."""
-    max_long = (1 << 63) - 1
-    init = F.array(*[F.lit(max_long).cast("long") for _ in range(n_hashes)])
-
-    def step(acc: Column, s: Column) -> Column:
-        hs = F.array(*[F.xxhash64(s, F.lit(i)) for i in range(n_hashes)])
-        return F.zip_with(acc, hs, lambda a, h: F.least(a, h))
-
-    return F.aggregate(shingles, init, step)
-
-
 def minhash_signature(
     df: DataFrame,
     id_col: str,
@@ -174,8 +157,6 @@ def minhash_signature(
     fast local shape: every hash runs inside whole-stage codegen, and because
     min() partial-aggregates map-side, the shuffle carries one partially
     reduced row per (mapper, id) — the corpus text itself never shuffles.
-    (The HOF-aggregate form above avoids the shuffle but evaluates
-    interpreted — measured ~10x slower per shingle.)
 
     ``carry_cols``: extra per-id columns to carry through the aggregate
     (functionally dependent on id; carried via first()).
@@ -219,33 +200,6 @@ def lsh_band_keys(sig: Column, n_hashes: int, bands: int) -> Column:
         )
 
     return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
-
-
-def simhash_expr(tokens: Column, bits: int = 64) -> Column:
-    """64-bit SimHash over a token array, as a native expression.
-
-    For each bit position, sum +1/-1 votes of each token's hash bit, then
-    re-assemble the sign bits. Uses shiftright + bit-and on xxhash64 values.
-    """
-    token_hashes = F.transform(tokens, F.xxhash64)
-    bit_cols = []
-    for b in range(bits):
-        vote = F.aggregate(
-            token_hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h, _b=b: acc
-            + F.when(F.shiftright(h, _b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bit_cols.append(
-            F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-            * F.lit(2 ** b).cast("long")
-            if b < 63
-            else F.when(vote > 0, F.lit(-(2 ** 63)).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out
 
 
 def hamming64_expr(a: Column, b: Column) -> Column:

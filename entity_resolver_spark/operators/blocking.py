@@ -4,28 +4,26 @@ Replaces the reference's two blocking passes —
 * exact person-hash grouping (/root/reference/src/classifying.py:1930-1968)
 * Weaviate ANN expansion, cosine distance <= 0.18
   (/root/reference/src/classifying.py:1663-1833)
-— with Spark-native passes that all emit (conv_id, block_key, skey) rows into
-ONE unified pair-generation join:
+— with four Spark-native key families that all emit (conv_id, block_key,
+skey) rows into ONE unified pair-generation join:
 
-  B1 exact      : block_key = name_hash / sorted-token name hash     (J3)
-  B2 sorted-ngh : GLOBAL rank under a range partitioning, overlapping rank
-                  buckets -> neighbors within SNM_WINDOW/2 share a bucket
-                  (north_rule's "sorted-neighborhood on normalized name/text
-                  keys"); no per-prefix Window, no single-task sort
-  B3 minhash-lsh: banded MinHash over word shingles of norm_text (north_rule's
-                  "MinHash-LSH on token shingles"; replaces the ANN join J4)
-  B4 name-lsh   : banded MinHash over char 3-grams of the name key
-  B5 anchors    : for EVERY name token (len >= 3), three keys pairing the
-                  anchor with the sorted initials of the other tokens:
-                  token | soundex(token) | sorted-chars(token). The
-                  multi-anchor form is order/length symmetric ("Turing,
-                  Rosalind" and "Turing, R." both emit turing|r even though
-                  their LONGEST token differs), soundex catches phonetic
-                  typos, and the sorted-chars (anagram) key catches
-                  adjacent-transposition typos that change soundex ("Mnedel"
-                  -> M340 vs "Mendel" -> M534: soundex collapses same-code
-                  adjacent letters THROUGH the first letter, so swaps across
-                  position 0 break it; the char multiset is swap-invariant).
+  exact   (t:)  : hash of the sorted-token name key                  (J3)
+  anchors (i:, a:): for EVERY name token (len >= 3), the token — or its
+                  sorted characters — paired with the sorted initials of
+                  the other tokens. The multi-anchor form is order/length
+                  symmetric ("Turing, Rosalind" and "Turing, R." both emit
+                  turing|r even though their LONGEST token differs), and the
+                  sorted-chars (anagram) key catches adjacent-transposition
+                  typos ("Mnedel" ~ "Mendel").
+  text-MinHash (m): banded MinHash over word shingles of the normalized
+                  text (north_rule's "MinHash-LSH on token shingles";
+                  replaces the ANN join J4)
+  rare shingles (r): inverted index on shingles with document frequency
+                  <= rare_shingle_max_df
+
+The two text families read one materialized distinct-shingle table, so the
+corpus text is shingled once per run. Records without a name get no name
+keys and keep their text keys.
 
 Pair generation is a single self-equi-join on block_key with a skew guard:
 hot blocks (> max_block_size members) are split into RANK-ORDERED overlapping
@@ -45,11 +43,11 @@ pipeline STAGE: the Warehouse stage boundary (plans/pipeline.py writes
 cut, and a mid-stage executor loss merely recomputes this stage from the
 previous stage table, never from raw input. The cuts that would need to
 become Warehouse round-trips if blocking were ever split into separately
-resumable sub-stages are: the global-rank stamp (`_pid` rows, SNM), the
-rare-shingle inverted index (scanned for df-cap + probe), and the
-post-split block table feeding the pair self-join. The CC loop is the one
-place where an intra-stage failure loses unbounded work; it has the
-``reliable_every`` knob instead (operators/clustering.py).
+resumable sub-stages are: the distinct-shingle table (read by the MinHash
+signature and the rare-shingle df-cap + probe) and the post-split block
+table feeding the pair self-join. The CC loop is the one place where an
+intra-stage failure loses unbounded work; it has the ``reliable_every``
+knob instead (operators/clustering.py).
 """
 
 from __future__ import annotations
@@ -58,11 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_resolver_spark.config import EngineConfig
-from entity_resolver_spark.functions.hashing import (
-    lsh_band_keys,
-    minhash_signature,
-    shingles_expr,
-)
+from entity_resolver_spark.functions.hashing import lsh_band_keys, shingles_expr
 
 
 def _name_tokens() -> F.Column:
@@ -82,32 +76,12 @@ def _named(key: F.Column) -> F.Column:
     return F.when(F.col("name_key") != "", key)
 
 
-def _exact_key_exprs(include_plain: bool = True) -> list[F.Column]:
-    """B1: exact normalized-name-hash key + sorted-token name key.
-
-    The plain key is STRICTLY SUBSUMED by the sorted-token key before the
-    skew split (name_hash = content_hash(name_key); equal name_key implies
-    equal sorted tokens), so ``include_plain=False`` drops it — the only
-    coverage it can add is inside a HOT sorted-token block whose equal-name
-    run exceeds the split cap, and the rank-ordered split sorts by skey so
-    equal names stay adjacent (cfg.exact_plain_enabled; volume/recall
-    measured by scripts/prune_eval.py)."""
-    sorted_tok = _named(
+def _exact_key_array() -> F.Column:
+    """Exact pass: the sorted-token name key (``t:``). Equal normalized
+    names, and names equal up to word order, share it."""
+    return F.array(_named(
         F.concat(F.lit("t:"), F.xxhash64(_sorted_name_key()).cast("string"))
-    )
-    out = [F.array(sorted_tok)]
-    if include_plain:
-        plain = F.when(
-            F.col("name_hash").isNotNull(),
-            F.concat(F.lit("x:"), F.col("name_hash").cast("string")),
-        )
-        out.insert(0, F.array(plain))
-    return out
-
-
-def exact_blocks(records: DataFrame) -> DataFrame:
-    """B1 as standalone (conv_id, block_key) rows — audit/compat surface."""
-    return _explode_keys(records, _exact_key_exprs())
+    ))
 
 
 def _explode_keys(records: DataFrame, key_arrays: list[F.Column]) -> DataFrame:
@@ -129,17 +103,14 @@ def _sorted_chars(t: F.Column) -> F.Column:
     return F.concat_ws("", F.array_sort(F.filter(F.split(t, ""), lambda c: c != "")))
 
 
-def _anchor_key_arrays(
-    forms: tuple = ("identity", "soundex", "anagram"),
-) -> list[F.Column]:
-    """B5: per-token anchor keys. For each name token t (len >= 3), pair an
-    anchor form of t with the sorted first letters of the OTHER tokens.
+def _anchor_key_arrays() -> list[F.Column]:
+    """Anchor pass: per-token keys. For each name token t (len >= 3), pair
+    an anchor form of t with the sorted first letters of the OTHER tokens.
     Symmetric in which token is the surname — 'rosalind turing' emits both
     (rosalind|t) and (turing|r), so 'turing r' meets it at turing|r no matter
     which token is longer (the old longest-token-as-surname heuristic broke
-    exactly there). Three anchor forms per token: identity (initialisms),
-    soundex (phonetic typos), sorted chars (transposition typos).
-    ``forms`` selects the enabled families (EngineConfig.anchor_forms)."""
+    exactly there). Two anchor forms per token: identity (``i:``,
+    initialisms) and sorted chars (``a:``, transposition typos)."""
     toks = _name_tokens()
     idx = F.sequence(F.lit(1), F.size(toks))
 
@@ -164,144 +135,15 @@ def _anchor_key_arrays(
 
         return F.when(F.size(toks) > 0, F.transform(idx, one))
 
-    builders = {
-        "identity": lambda: fam("i:", lambda t: t),
-        "soundex": lambda: fam("p:", F.soundex),
-        "anagram": lambda: fam("a:", _sorted_chars),
-    }
-    unknown = set(forms) - set(builders)
-    if unknown:
-        raise ValueError(f"unknown anchor forms: {sorted(unknown)}")
-    return [builders[f]() for f in forms]
-
-
-def initials_blocks(records: DataFrame) -> DataFrame:
-    """B5 identity anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("identity",)))
-
-
-def soundex_blocks(records: DataFrame) -> DataFrame:
-    """B5 soundex anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("soundex",)))
-
-
-def anagram_blocks(records: DataFrame) -> DataFrame:
-    """B5 sorted-chars anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("anagram",)))
-
-
-def _global_rank(df: DataFrame, sort_cols: list[str]) -> DataFrame:
-    """Append a 0-based GLOBAL row index under ``sort_cols`` order, scalably:
-    range-repartition on the sort key (balanced partitions regardless of key
-    skew — ties spread across partitions because the partitioner sees the
-    full tuple), rank per partition locally, then shift by per-partition
-    offsets (one count per partition, collected to the driver — O(partitions)
-    rows, not data). This replaces a per-prefix Window whose hottest prefix
-    was one task sorting an unbounded slice — the non-scalable shape.
-    """
-    parts = df.repartitionByRange(*sort_cols)
-    stamped = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = {
-        r["_pid"]: r["n"]
-        for r in stamped.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not counts:
-        return stamped.withColumn("_rank", F.lit(0).cast("long"))
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    omap = F.create_map(
-        *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-    )
-    win = Window.partitionBy("_pid").orderBy(*sort_cols)
-    return stamped.withColumn(
-        "_rank",
-        (F.row_number().over(win) - 1 + omap[F.col("_pid")]).cast("long"),
-    )
-
-
-def sorted_neighborhood_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B2: sorted-neighborhood via overlapping GLOBAL rank buckets.
-
-    Records are globally ranked by the sort key (see ``_global_rank``); two
-    bucketings offset by half a window guarantee any two records within
-    ``snm_window/2`` ranks share at least one bucket. Two sort keys: the name
-    as-is (initials sort next to their expansions: "ramanujan j" ~ "ramanujan
-    joseph") and the token-sorted form (word order swaps: "franz schubert" ~
-    "schubert franz").
-    """
-    w = cfg.snm_window
-    base = records.select("conv_id", "name_key").where(F.col("name_key") != "")
-    out = None
-    for tag, key in (("n", F.col("name_key")), ("o", _sorted_name_key())):
-        keyed = base.select(
-            "conv_id", key.alias("_skey"), _sorted_name_key().alias("skey")
-        )
-        ranked = _global_rank(keyed, ["_skey", "conv_id"])
-        for off in (0, w // 2):
-            b = ranked.select(
-                "conv_id",
-                F.concat_ws(
-                    ":", F.lit(f"s{tag}{off}"),
-                    F.floor((F.col("_rank") + off) / w).cast("string"),
-                ).alias("block_key"),
-                "skey",
-            )
-            out = b if out is None else out.unionByName(b)
-    return out
-
-
-def minhash_lsh_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B3: banded-MinHash blocks over word shingles of the normalized text.
-    Signature via explode+groupBy (codegen'd hashes; partial aggregation
-    keeps the shuffle to one reduced row per (mapper, record))."""
-    with_shingles = records.select(
-        "conv_id",
-        shingles_expr(F.col("tokens"), cfg.shingle_k).alias("_sh"),
-        _sorted_name_key().alias("skey"),
-    )
-    sig = minhash_signature(
-        with_shingles, "conv_id", "_sh", cfg.minhash_hashes, carry_cols=["skey"]
-    )
-    keys = lsh_band_keys(F.col("sig"), cfg.minhash_hashes, cfg.minhash_bands)
-    tagged = F.transform(keys, lambda k: F.concat(F.lit("m"), k))
-    return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
-
-
-def name_lsh_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B4: banded-MinHash blocks over CHARACTER 3-grams of the token-sorted
-    name key. This is the direct analogue of the reference's ANN expansion
-    over *name-string* vectors (src/classifying.py:1663-1833 queries Weaviate
-    with person-name embeddings, not composite text): small name edits —
-    typos, diacritics, added initials — keep most char 3-grams, so the pair
-    survives blocking even when exact/SNM passes miss it."""
-    skey = _sorted_name_key()
-    n = F.length(skey)
-    grams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2), lambda i: F.substring(skey, i, F.lit(3))
-        ),
-    ).otherwise(F.array(skey))
-    with_grams = records.where(F.col("name_key") != "").select(
-        "conv_id", grams.alias("_g"), skey.alias("skey")
-    )
-    sig = minhash_signature(
-        with_grams, "conv_id", "_g", cfg.name_lsh_hashes, carry_cols=["skey"]
-    )
-    keys = lsh_band_keys(F.col("sig"), cfg.name_lsh_hashes, cfg.name_lsh_bands)
-    tagged = F.transform(keys, lambda k: F.concat(F.lit("g"), k))
-    return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
+    return [fam("i:", lambda t: t), fam("a:", _sorted_chars)]
 
 
 def _shingle_hash_rows(records: DataFrame, cfg: EngineConfig) -> DataFrame:
     """(conv_id, _gh, skey): one row per DISTINCT word ``rare_shingle_k``-
     shingle per record, shingle hashed to 64 bits. Materialized once
-    (localCheckpoint) — consumed by the rare-shingle df aggregate + probe
-    AND, when ``minhash_unified_scan`` is on, by the text-MinHash signature,
-    so the corpus text is scanned and shingled exactly once per blocking
-    run."""
+    (localCheckpoint) — consumed by the text-MinHash signature AND the
+    rare-shingle df aggregate + probe, so the corpus text is scanned and
+    shingled exactly once per blocking run."""
     return records.select(
         "conv_id",
         F.explode(
@@ -314,14 +156,14 @@ def _shingle_hash_rows(records: DataFrame, cfg: EngineConfig) -> DataFrame:
 def minhash_blocks_from_shingle_rows(
     sh: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
-    """B3 (unified-scan form): banded-MinHash blocks computed from the
-    materialized ``_shingle_hash_rows`` table instead of a second scan +
-    shingle build over the corpus text. Signature hashes re-hash the 64-bit
+    """Text-MinHash pass: banded-MinHash blocks (``m``) computed from the
+    materialized ``_shingle_hash_rows`` table, so the text is not scanned
+    and shingled a second time. Signature hashes re-hash the 64-bit
     shingle hash per slot (xxhash64 over longs) — statistically the same
     LSH family as hashing the shingle string per slot (recall measured
     identical at 24k: 0.99971 either way), while the 144k-corpus text is
-    shingled ONCE for both text passes (the string-scan form cost 73s of a
-    ~210s blocking wall at local[16]).
+    shingled ONCE for both text passes (a separate string-scan signature
+    cost 73s of a ~210s blocking wall at local[16]).
 
     MinHash over DISTINCT shingles equals MinHash over the multiset — min()
     ignores multiplicity — so sharing the rare pass's distinct rows is
@@ -342,12 +184,12 @@ def minhash_blocks_from_shingle_rows(
     return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
 
 
-def rare_shingle_blocks(
-    records: DataFrame, cfg: EngineConfig, sh: DataFrame | None = None
-) -> DataFrame:
-    """B7: inverted index on RARE text shingles — block key = any distinct
-    word ``rare_shingle_k``-shingle whose document frequency is
-    <= ``rare_shingle_max_df``. The shingle here is LONGER than the
+def rare_shingle_blocks(sh: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Rare-shingle pass: inverted index on RARE text shingles over the
+    ``_shingle_hash_rows`` table — block key = any distinct word
+    ``rare_shingle_k``-shingle whose document frequency is
+    <= ``rare_shingle_max_df`` (a cap <= 1 leaves no block of two members,
+    so the pass emits nothing). The shingle here is LONGER than the
     Jaccard-estimation shingles (``shingle_k``): rarity decays as the
     corpus grows over a bounded vocabulary, and the scale-correct response
     is a longer (more specific) shingle at the SAME df cap, not a higher
@@ -370,12 +212,6 @@ def rare_shingle_blocks(
     any skewed probe partition. A count-Window over the shingle would instead
     ship every instance of every hot shingle to one task.
     """
-    if cfg.rare_shingle_max_df <= 1:
-        return records.sparkSession.createDataFrame(
-            [], "conv_id string, block_key string, skey string"
-        )
-    if sh is None:
-        sh = _shingle_hash_rows(records, cfg)  # scanned twice: df agg + probe
     # INVERTED probe (r5): most distinct shingles are rare at any sane df cap
     # — at 144k entities the old rare-side equi-join shuffled ~30M of ~45M
     # occurrence rows against an ~10M-row build side. The HOT set (df > cap)
@@ -392,67 +228,38 @@ def rare_shingle_blocks(
     )
     hot_side = F.broadcast(hot) if hot.count() <= HOT_BROADCAST_MAX else hot
     rare_rows = sh.join(hot_side, "_gh", "left_anti")
-    if cfg.rare_shingle_per_record <= 0:
-        # MEMBER-SET dedup (r5, exactly pair-preserving): consecutive
-        # shingles of one shared phrase all key the SAME record set, and
-        # 62% of rare blocks at the 144k corpus had only ONE member (zero
-        # pairs, pure join traffic). Group members per shingle (bounded by
-        # the df cap — never a hot-key collect), drop size-1 sets, and key
-        # each block by the hash of its member list so duplicate sets
-        # collapse to one block. Measured at 144k: 30.3M block rows ->
-        # ~14.7M, raw pair fan-out 20.8M -> 17.9M, with the downstream
-        # pair set IDENTICAL by construction.
-        grouped = (
-            rare_rows.groupBy("_gh")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("conv_id", "skey"))
-                ).alias("_mem")
-            )
-            .where(F.size("_mem") >= 2)
-            .select(
-                F.transform(F.col("_mem"), lambda m: m["conv_id"]).alias("_ids"),
-                "_mem",
-            )
-            # exact-array dedup (a hash-only dedup could drop a real block on
-            # a 64-bit collision); the hash is only the block KEY, where a
-            # collision merely merges two blocks — extra pairs, never lost
-            .dropDuplicates(["_ids"])
-            .select(F.xxhash64("_ids").alias("_gh"), "_mem")
+    # MEMBER-SET dedup (r5, exactly pair-preserving): consecutive shingles of
+    # one shared phrase all key the SAME record set, and 62% of rare blocks
+    # at the 144k corpus had only ONE member (zero pairs, pure join traffic).
+    # Group members per shingle (bounded by the df cap — never a hot-key
+    # collect), drop size-1 sets, and key each block by the hash of its
+    # member list so duplicate sets collapse to one block. Measured at 144k:
+    # 30.3M block rows -> ~14.7M, raw pair fan-out 20.8M -> 17.9M, with the
+    # downstream pair set IDENTICAL by construction.
+    grouped = (
+        rare_rows.groupBy("_gh")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("conv_id", "skey"))
+            ).alias("_mem")
         )
-        return grouped.select(
-            F.explode("_mem").alias("_m"),
-            F.concat(F.lit("r"), F.col("_gh").cast("string")).alias("block_key"),
-        ).select(
-            F.col("_m.conv_id").alias("conv_id"), "block_key",
-            F.col("_m.skey").alias("skey"),
+        .where(F.size("_mem") >= 2)
+        .select(
+            F.transform(F.col("_mem"), lambda m: m["conv_id"]).alias("_ids"),
+            "_mem",
         )
-    if cfg.rare_shingle_per_record > 0:
-        # Bottom-k cap per record (prefix-filtering / KMV form): keep the K
-        # smallest rare-shingle hashes. The hash order is GLOBAL, so two
-        # near-dup records keep the same shared shingles wherever both sides
-        # still contain them — a true pair collides unless token noise
-        # removed every one of the K jointly-smallest shared shingles.
-        # Bounds per-record key fan-out (and with it the pair-join and
-        # dedup shuffles, the 144k bottleneck) at K instead of the text
-        # length. collect_list here is bounded by the record's distinct
-        # rare-shingle count and partial-aggregates map-side.
-        rare_rows = (
-            rare_rows.groupBy("conv_id")
-            .agg(
-                F.slice(
-                    F.sort_array(F.collect_list("_gh")),
-                    1,
-                    cfg.rare_shingle_per_record,
-                ).alias("_ghs"),
-                F.first("skey").alias("skey"),
-            )
-            .select("conv_id", F.explode("_ghs").alias("_gh"), "skey")
-        )
-    return rare_rows.select(
-        "conv_id",
+        # exact-array dedup (a hash-only dedup could drop a real block on a
+        # 64-bit collision); the hash is only the block KEY, where a
+        # collision merely merges two blocks — extra pairs, never lost
+        .dropDuplicates(["_ids"])
+        .select(F.xxhash64("_ids").alias("_gh"), "_mem")
+    )
+    return grouped.select(
+        F.explode("_mem").alias("_m"),
         F.concat(F.lit("r"), F.col("_gh").cast("string")).alias("block_key"),
-        "skey",
+    ).select(
+        F.col("_m.conv_id").alias("conv_id"), "block_key",
+        F.col("_m.skey").alias("skey"),
     )
 
 
@@ -463,46 +270,17 @@ def all_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
     can order hot-block members by name — splits then forgo name-DISTANT
     pairs, not arbitrary ones.
 
-    The cheap per-record passes (exact, anchor battery) fuse into ONE scan of
-    records (one select, one explode). The MinHash-LSH passes go through
-    explode+groupBy signatures (codegen'd; partial aggregation keeps their
-    shuffles to one reduced row per mapper x record — the corpus text never
-    shuffles), and SNM uses range-partitioned global ranks.
-
-    Which passes run is config (EngineConfig.snm_enabled / name_lsh_enabled /
-    minhash_text_enabled / anchor_forms) — defaults follow the 72k-entity
-    leave-one-out audit (scripts/blocking_audit.py, BENCH/BASELINE.md): a
-    pass must buy marginal recall proportionate to its unique-pair volume,
-    because every junk candidate is Jaro-Winkler + cosine work downstream.
+    The per-record name passes (exact, anchors) fuse into ONE scan of
+    records (one select, one explode). The text passes share one
+    materialized distinct-shingle table: the MinHash signature is an
+    explode+groupBy (codegen'd; partial aggregation keeps its shuffle to one
+    reduced row per mapper x record — the corpus text never shuffles), and
+    the rare-shingle index is a df aggregate + probe over the same rows.
     """
-    out = _explode_keys(
-        records,
-        [
-            *_exact_key_exprs(cfg.exact_plain_enabled),
-            *_anchor_key_arrays(cfg.anchor_forms),
-        ],
-    )
-    if cfg.snm_enabled:
-        out = out.unionByName(sorted_neighborhood_blocks(records, cfg))
-    # Unified text scan: when both text passes run, shingle the corpus ONCE
-    # (the k=rare_shingle_k distinct-shingle hash table) and derive the
-    # MinHash signature AND the rare-shingle index from it; the standalone
-    # string-scan MinHash remains for profiles with the rare pass disabled.
-    unified = (
-        cfg.minhash_unified_scan
-        and cfg.minhash_text_enabled
-        and cfg.rare_shingle_max_df > 1
-    )
-    sh = _shingle_hash_rows(records, cfg) if unified else None
-    if cfg.minhash_text_enabled:
-        out = out.unionByName(
-            minhash_blocks_from_shingle_rows(sh, cfg)
-            if unified
-            else minhash_lsh_blocks(records, cfg)
-        )
-    if cfg.name_lsh_enabled:
-        out = out.unionByName(name_lsh_blocks(records, cfg))
-    return out.unionByName(rare_shingle_blocks(records, cfg, sh=sh))
+    out = _explode_keys(records, [_exact_key_array(), *_anchor_key_arrays()])
+    sh = _shingle_hash_rows(records, cfg)
+    out = out.unionByName(minhash_blocks_from_shingle_rows(sh, cfg))
+    return out.unionByName(rare_shingle_blocks(sh, cfg))
 
 
 # Blocks larger than max_block_size * this multiplier skip the rank-ordered
@@ -544,6 +322,14 @@ def split_hot_blocks(
       handling can split the mega-key's join partitions freely.
 
     Forgone pairs are exactly countable — see ``hot_block_metrics``.
+
+    PRECONDITION of the ``_st`` stamp (see below): when ``blocks`` carries
+    ``skey``, it must hold every named record's ``t:`` block, i.e. be
+    ``all_blocks`` output (a superset is fine). The stamp tells
+    ``pairs_from_blocks`` that the ``t:`` pass emits every same-name pair,
+    so on a partial key battery without ``t:`` keys those pairs are
+    silently dropped. Pass such a battery without ``skey`` (no stamp), or
+    drop ``_st`` before ``pairs_from_blocks``.
     """
     cap = cfg.max_block_size
     h = max(cap // 2, 1)
@@ -778,6 +564,9 @@ def pairs_from_blocks(blocks: DataFrame, materialize: bool = True) -> DataFrame:
     output feeding the dedup exchange — same-name records collide in every
     text/anchor pass, so their cross products used to be re-emitted and
     re-deduped once per pass — while the distinct pair set is unchanged.
+    That holds only when the stamped rows came from ``all_blocks`` output
+    (the precondition stated on ``split_hot_blocks``); for any other block
+    set, drop ``_st`` first.
     """
     has_st = "_st" in blocks.columns
     blocks = blocks.select(

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from entity_resolver_spark.config import EngineConfig
 from entity_resolver_spark.operators.blocking import (
     all_blocks,
+    hot_block_metrics,
     pairs_from_blocks,
     split_hot_blocks,
 )
@@ -94,15 +95,13 @@ class ResolutionPipeline:
         )
 
         def build_pairs() -> DataFrame:
-            from entity_resolver_spark.operators.blocking import hot_block_metrics
-
             # materialize the key battery once: the skew-guard metric and the
             # split both consume it.
             #
             # Durability note (cluster scale): this localCheckpoint — and the
-            # ones inside the blocking passes (_global_rank's rank stamp,
-            # rare_shingle's doc-shingle table, split_hot_blocks' input) —
-            # store blocks on executors only; an executor loss mid-stage
+            # ones inside the blocking passes (the distinct-shingle table,
+            # the rare-shingle hot set, split_hot_blocks' sizes) — store
+            # blocks on executors only; an executor loss mid-stage
             # fails the stage. That is acceptable HERE because the whole
             # "pairs" stage is wrapped by _run_stage, whose Warehouse
             # two-rename commit is itself the durable checkpoint: a retry
@@ -188,11 +187,6 @@ class ResolutionPipeline:
         text — stale edges from the previous delivery cannot leak into
         clustering.
         """
-        from entity_resolver_spark.operators.blocking import (
-            all_blocks,
-            split_hot_blocks,
-        )
-
         cfg = self.cfg
         for stage in ("records", "vectors", "pairs", "scored"):
             if not self.wh.exists(stage):
@@ -217,11 +211,7 @@ class ResolutionPipeline:
         # Retract everything touching a re-delivered conv_id: pairs scored
         # against the OLD text must not survive the union below, and block
         # edges the new text no longer produces must disappear.
-        old_pairs = (
-            self.wh.read("pairs")
-            .join(new_ids.withColumnRenamed("conv_id", "left"), "left", "left_anti")
-            .join(new_ids.withColumnRenamed("conv_id", "right"), "right", "left_anti")
-        )
+        old_pairs = _retract(self.wh.read("pairs"), new_ids)
         # lineage cut: the key battery is scanned by the split's sizes join
         # AND the split output three times below (semi-join probe, touched
         # expansion, pair join) — materialize both once
@@ -233,16 +223,11 @@ class ResolutionPipeline:
         touched = (
             new_blocks.select("block_key").distinct().join(blocks, "block_key")
         )
-        a = touched.alias("a")
-        b = touched.alias("b")
-        cand = (
-            a.join(b, "block_key")
-            .where(F.col("a.conv_id") < F.col("b.conv_id"))
-            .select(
-                F.col("a.conv_id").alias("left"), F.col("b.conv_id").alias("right")
-            )
-            .dropDuplicates(["left", "right"])
-        )
+        # touched is a SUBSET of the block table: two old records that meet
+        # in a touched block may share a t: block that is not touched, so
+        # the subsumption stamp's precondition fails — pair without it. No
+        # lineage cut needed: `blocks` is already checkpointed.
+        cand = pairs_from_blocks(touched.drop("_st"), materialize=False)
         fresh_pairs = cand.join(
             old_pairs.select("left", "right"), ["left", "right"], "left_anti"
         )
@@ -250,11 +235,7 @@ class ResolutionPipeline:
         fresh_pairs = self.wh.read("pairs_new")
         self.metrics.append({"stage": "pairs_incr", **stats})
 
-        old_scored = (
-            self.wh.read("scored")
-            .join(new_ids.withColumnRenamed("conv_id", "left"), "left", "left_anti")
-            .join(new_ids.withColumnRenamed("conv_id", "right"), "right", "left_anti")
-        )
+        old_scored = _retract(self.wh.read("scored"), new_ids)
         fresh_scored = score_pairs(
             pair_features(fresh_pairs, records, cfg, vectors=vectors), self.model
         )
@@ -354,6 +335,13 @@ class ResolutionPipeline:
         records = self.wh.read("records")
         for name, df in string_stats(records).items():
             self._run_stage(name, lambda df=df: df, resume)
+
+
+def _retract(pairs: DataFrame, ids: DataFrame) -> DataFrame:
+    """Pair rows with neither side in ``ids`` (a one-column conv_id frame)."""
+    return pairs.join(
+        ids.withColumnRenamed("conv_id", "left"), "left", "left_anti"
+    ).join(ids.withColumnRenamed("conv_id", "right"), "right", "left_anti")
 
 
 def evaluate_pairs(scored: DataFrame, labeled: DataFrame) -> dict:

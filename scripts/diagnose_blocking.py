@@ -52,13 +52,11 @@ def main() -> None:
         .select("left", "right", "block_key")
     ).localCheckpoint()
 
-    fam = F.when(F.col("block_key").startswith("x:"), "exact") \
-        .when(F.col("block_key").startswith("t:"), "sorted_tok") \
-        .when(F.col("block_key").startswith("i:"), "initials") \
-        .when(F.col("block_key").startswith("p:"), "soundex") \
-        .when(F.col("block_key").startswith("s"), "snm") \
+    fam = F.when(F.col("block_key").startswith("t:"), "exact") \
+        .when(F.col("block_key").startswith("i:"), "anchor_identity") \
+        .when(F.col("block_key").startswith("a:"), "anchor_anagram") \
         .when(F.col("block_key").startswith("m"), "minhash_text") \
-        .when(F.col("block_key").startswith("g"), "name_lsh") \
+        .when(F.col("block_key").startswith("r"), "rare_shingle") \
         .otherwise("other")
 
     print(f"\nmissed true pairs: {n_missed}")

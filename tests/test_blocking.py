@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolver_spark.config import EngineConfig
@@ -28,11 +29,10 @@ def test_pairs_are_canonical_and_deduped(spark, records):
 
 
 def test_blocking_reduces_comparisons(spark):
-    """Reduction ratio improves with corpus size (SNM volume is linear in
-    window x corpus, LSH blocks are bounded): assert at 200 entities where
-    the fixed SNM window no longer spans a meaningful corpus fraction. The
-    conftest 20-entity corpus is too small for a reduction claim — window 24
-    alone covers half of 55 records."""
+    """Reduction ratio improves with corpus size (name and rare-shingle
+    blocks stay small while the all-pairs count grows quadratically): assert
+    at 200 entities. The conftest 20-entity corpus is too small for a
+    reduction claim — its 55 records are a handful of dense families."""
     from entity_resolver_spark import datagen
     from entity_resolver_spark.operators.transcripts import build_entity_records
 
@@ -197,10 +197,13 @@ def test_rare_member_set_dedup_is_pair_preserving(spark, records):
     member sets (and drops size-1 blocks). The resulting PAIR set must equal
     the naive one-block-per-shingle form's, exactly."""
     from entity_resolver_spark.functions.hashing import shingles_expr
-    from entity_resolver_spark.operators.blocking import rare_shingle_blocks
+    from entity_resolver_spark.operators.blocking import (
+        _shingle_hash_rows,
+        rare_shingle_blocks,
+    )
 
     cfg = EngineConfig()
-    blocks = rare_shingle_blocks(records, cfg)
+    blocks = rare_shingle_blocks(_shingle_hash_rows(records, cfg), cfg)
     got = pairs_from_blocks(blocks)
 
     # naive reference: one block per rare shingle hash
@@ -244,14 +247,62 @@ def test_unified_scan_minhash_schema_and_bands(spark, records):
     assert out.where(~F.col("block_key").startswith("m")).count() == 0
 
 
-def test_exact_plain_key_subsumed_by_sorted_token_key(spark, records):
-    """The x: key is strictly subsumed by the t: key pre-split: enabling it
-    must not add any pair on a corpus with no hot equal-name runs."""
-    from dataclasses import replace
+def _stamp_corpus(spark, whitespace_names: bool):
+    """Synthetic records (conv_id, name_key, tokens): one large same-name
+    family (word order varies, so it shares one t: key), a small same-name
+    family, and nameless records — every family also shares text, so the
+    text passes re-emit the same-name pairs the stamp is meant to skip."""
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
 
-    base = EngineConfig()
-    on = replace(base, exact_plain_enabled=True)
-    p_off = candidate_pairs(records, base)
-    p_on = candidate_pairs(records, on)
-    assert p_off.exceptAll(p_on).count() == 0
-    assert p_on.exceptAll(p_off).count() == 0
+    def text(family: int, i: int) -> list[str]:
+        own = 200 + family * 60 + i * 3
+        return vocab[family * 40: family * 40 + 24] + vocab[own: own + 3]
+
+    for i in range(12):
+        name = "franz schubert" if i % 2 else "schubert franz"
+        rows.append((f"s{i:02d}", name, text(0, i)))
+    for i in range(3):
+        rows.append((f"t{i:02d}", "rosalind turing", text(1, i)))
+    blank = [" ", "   "] if whitespace_names else ["", ""]
+    for i in range(4):
+        rows.append((f"n{i:02d}", blank[i % 2], text(2, i)))
+    return spark.createDataFrame(
+        rows, "conv_id string, name_key string, tokens array<string>"
+    )
+
+
+def _pair_set(df):
+    return {(r["left"], r["right"]) for r in df.collect()}
+
+
+@pytest.mark.parametrize(
+    "cap,whitespace_names",
+    [(4, False), (4, True), (64, False)],
+    ids=["hot_t_block", "whitespace_names", "no_hot_block"],
+)
+def test_subsumption_stamp_keeps_pair_set(spark, cap, whitespace_names):
+    """Key subsumption at pair emit: on ``all_blocks`` output the ``_st``
+    stamp only removes duplicate emissions — the distinct pair set with the
+    stamp equals the set without it."""
+    from entity_resolver_spark.operators.blocking import hot_block_metrics
+
+    cfg = EngineConfig(max_block_size=cap)
+    recs = _stamp_corpus(spark, whitespace_names)
+    blocks = all_blocks(recs, cfg).localCheckpoint()
+    n_hot = hot_block_metrics(blocks, cfg).collect()[0]["n_hot_blocks"]
+    split = split_hot_blocks(blocks, cfg, materialized=True).localCheckpoint()
+
+    stamped = split.where(F.col("_st").isNotNull())
+    assert stamped.count() > 0, "the stamp must be exercised"
+    if cap > 12:  # larger than every family
+        assert n_hot == 0
+    else:
+        assert n_hot > 0
+        # the large family's t: block is hot, so its rows carry no stamp
+        assert stamped.where(F.col("conv_id").startswith("s")).count() == 0
+
+    on = _pair_set(pairs_from_blocks(split))
+    off = _pair_set(pairs_from_blocks(split.drop("_st")))
+    assert on == off
+    assert ("t00", "t01") in on and ("n00", "n01") in on

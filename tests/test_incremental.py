@@ -7,17 +7,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_resolver_spark import datagen
+from entity_resolver_spark.config import EngineConfig
 from entity_resolver_spark.operators.scoring import Model
 from entity_resolver_spark.plans.pipeline import ResolutionPipeline
 
 
-def test_incremental_matches_full_run(spark, tmp_path):
-    data = datagen.generate(n_entities=25, seed=7)
-    pdf = data["transcripts"]
+def _split_corpus(spark):
+    """25-entity corpus split 70/30 by conv_id, no conversation in both."""
+    pdf = datagen.generate(n_entities=25, seed=7)["transcripts"]
     convs = sorted(pdf["conv_id"].unique())
     old_set = set(convs[: int(len(convs) * 0.7)])
     first = datagen.to_spark(spark, pdf[pdf["conv_id"].isin(old_set)].reset_index(drop=True))
     second = datagen.to_spark(spark, pdf[~pdf["conv_id"].isin(old_set)].reset_index(drop=True))
+    return pdf, old_set, first, second
+
+
+def test_incremental_matches_full_run(spark, tmp_path):
+    pdf, old_set, first, second = _split_corpus(spark)
     full = datagen.to_spark(spark, pdf)
     model = Model.default()
 
@@ -53,3 +59,31 @@ def test_incremental_matches_full_run(spark, tmp_path):
         1 for r in fresh_rows if r["left"] in new_ids or r["right"] in new_ids
     )
     assert touching >= 0.9 * len(fresh_rows)
+
+
+def test_fold_pairs_cover_batch_pairs_with_hot_blocks(spark, tmp_path):
+    """The fold's pair path on a corpus with hot blocks (no re-delivery):
+    every pair the batch run on the union emits is in the folded pair
+    table, and every extra folded pair was already a pre-fold pair — one
+    the batch run's hot-split boundaries forgo (see the test above)."""
+    pdf, _, first, second = _split_corpus(spark)
+    cfg = EngineConfig(max_block_size=6)
+    model = Model.default()
+
+    def pair_set(df):
+        return {(r["left"], r["right"]) for r in df.select("left", "right").collect()}
+
+    pipe = ResolutionPipeline(spark, str(tmp_path / "incr"), cfg=cfg, model=model)
+    pipe.run(first, resume=False)
+    pre_fold = pair_set(pipe.wh.read("pairs"))
+    pipe.run_incremental(second)
+    folded = pair_set(pipe.wh.read("pairs"))
+
+    batch_pipe = ResolutionPipeline(spark, str(tmp_path / "full"), cfg=cfg, model=model)
+    batch_pipe.run(datagen.to_spark(spark, pdf), resume=False)
+    guard = next(m for m in batch_pipe.metrics if m["stage"] == "pairs_skew_guard")
+    assert guard["n_hot_blocks"] > 0
+    batch = pair_set(batch_pipe.wh.read("pairs"))
+
+    assert batch <= folded
+    assert folded - batch <= pre_fold
