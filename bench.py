@@ -28,11 +28,17 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry_mod
-    from entity_resolver_spark.operators.blocking import candidate_pairs
-    from entity_resolver_spark.operators.clustering import cluster_records
-    from entity_resolver_spark.operators.features import pair_features
-    from entity_resolver_spark.operators.scoring import Model, score_pairs
+    from entity_resolver_spark.config import BROADCAST_MAX_RECORDS, EngineConfig
+    from entity_resolver_spark.operators.features import pair_inputs, text_vectors
+    from entity_resolver_spark.operators.scoring import Model
     from entity_resolver_spark.operators.transcripts import build_entity_records
+    from entity_resolver_spark.plans.pipeline import (
+        evaluate_pairs,
+        stage_clusters,
+        stage_pair_inputs,
+        stage_pairs,
+        stage_scored,
+    )
     from entity_resolver_spark.session import get_spark
 
     spark = get_spark(
@@ -111,12 +117,13 @@ def main() -> None:
     transcripts.count()
     timings["corpus_load"] = round(time.monotonic() - t0, 3)
 
-    # Stage outputs are materialized with localCheckpoint — the in-memory
-    # equivalent of the pipeline's parquet stage tables. persist() alone
-    # keeps the full LOGICAL lineage, and Catalyst re-analyzes that whole
-    # tree (the fused blocking expression is several seconds of driver-side
-    # analysis) on EVERY downstream action — a fixed serial cost that
-    # swamped the per-pass scoring measurement at any parallelism.
+    # The ER segment runs the pipeline's own stage builders
+    # (plans/pipeline.py) and materializes each output with localCheckpoint
+    # — the in-memory equivalent of the pipeline's parquet stage tables.
+    # persist() alone keeps the full LOGICAL lineage, and Catalyst re-analyzes
+    # that whole tree (the fused blocking expression is several seconds of
+    # driver-side analysis) on EVERY downstream action — a fixed serial cost
+    # that swamped the per-pass scoring measurement at any parallelism.
     # Working-set projection (r5): in the pipeline the records stage is a
     # PARQUET table and every downstream stage reads it back through a
     # column-pruned scan — blocking/vectors/pair_inputs consume only the
@@ -128,6 +135,7 @@ def main() -> None:
     # the normalize stage for byte traffic the parquet pipeline never pays.
     # The canonical-store write of the text columns stays priced in the
     # pipeline's own stage-table write (and in DEPLOY_100TB's I/O row).
+    cfg, model = EngineConfig(), Model.default()
     _DEAD_DOWNSTREAM = ["full_text", "norm_text", "first_turn", "name_raw"]
     t0 = time.monotonic()
     records = (
@@ -137,73 +145,19 @@ def main() -> None:
     timings["er_normalize"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()
-    pairs = candidate_pairs(records).localCheckpoint()
+    pairs = stage_pairs(records, cfg)[0].localCheckpoint()
     n_pairs = pairs.count()
     timings["er_blocking"] = round(time.monotonic() - t0, 3)
 
-    # vectors are their own stage in the pipeline (warehouse table); build
-    # them once here too so scoring passes don't re-derive them
-    from entity_resolver_spark.config import EngineConfig
-    from entity_resolver_spark.operators.features import text_vectors
-
     t0 = time.monotonic()
-    vectors = text_vectors(records, EngineConfig()).localCheckpoint()
+    vectors = text_vectors(records, cfg).localCheckpoint()
     vectors.count()
     timings["er_vectors"] = round(time.monotonic() - t0, 3)
 
-    model = Model.default()
     # joined pair inputs materialize once (a pipeline stage); the measured
     # scoring segment is the pure map over them — features + classifier
-    from entity_resolver_spark.operators.features import (
-        features_from_inputs,
-        pair_inputs,
-    )
-
-    from entity_resolver_spark.config import BROADCAST_MAX_RECORDS
-
     t0 = time.monotonic()
-    # Scoring-stage layout: RANGE-partition the stage table by (left, right)
-    # before checkpointing. Measured on the 72k corpus at local[8] (19.65M
-    # pairs, identical rows and plan): AQE-coalesced layout 19.2s,
-    # round-robin 4-waves/core 26.7s, rangeBy(left,right) 13.8s at 32 parts
-    # / 14.0s at 8 — ADJACENCY is the lever, not wave count. Same-left pairs
-    # colocate in range order, so each Arrow batch repeats name-key pairs
-    # and the scorer's per-batch factorize dedup collapses them; round-robin
-    # scatter destroys exactly that and loses 1.9x. Range boundaries also
-    # balance task sizes. Task count scales with pair volume, capped at 4
-    # waves per core, floored at one per core (a floor-dominated 69k-pair
-    # corpus must not become 64 near-empty Arrow streams). The range
-    # exchange is timed here, in the stage that produces the table — a real
-    # deployment would write the stage table sorted/bucketed by pair key
-    # once and every scoring pass over it inherits the layout.
-    #
-    # The range exchange sits on the PAIRS INPUT, not on the pair_inputs
-    # output: RangePartitioning runs a separate partition-bounds sampling
-    # job that RECOMPUTES its whole child, so ranging the output evaluated
-    # the cosine/KMV Arrow stage twice per materialization (measured at the
-    # 72k corpus, local[16]: staged 173.9s vs a single 97.2s evaluation —
-    # the delta was mostly that hidden second pass). Sampling the already-
-    # checkpointed 16-byte pair rows instead is ~free, and the broadcast
-    # join + projection that follow are map-only, so the stage output
-    # inherits the pairs layout exactly. On the shuffled-join path (record
-    # side beyond the broadcast cap) the join exchange would destroy the
-    # input layout, so the layout move happens after the join — as a HASH
-    # repartition on `left` + local sort, which gets the same same-left
-    # adjacency without a sampling job over the expensive child.
-    score_tasks = max(cpus, min(4 * cpus, 1 + n_pairs // 65536))
-    if n_records <= BROADCAST_MAX_RECORDS:
-        inputs = pair_inputs(
-            pairs.repartitionByRange(score_tasks, "left", "right"),
-            records,
-            vectors=vectors,
-        ).localCheckpoint()
-    else:
-        inputs = (
-            pair_inputs(pairs, records, vectors=vectors)
-            .repartition(score_tasks, "left")
-            .sortWithinPartitions("left", "right")
-            .localCheckpoint()
-        )
+    inputs = stage_pair_inputs(pairs, records, vectors, cfg).localCheckpoint()
     inputs.count()
     timings["er_pair_inputs"] = round(time.monotonic() - t0, 3)
 
@@ -225,7 +179,7 @@ def main() -> None:
             "er_pair_inputs_smj" if auto_bcast else "er_pair_inputs_bcast"
         ] = round(time.monotonic() - t0, 3)
 
-    scored_plan = score_pairs(features_from_inputs(inputs), model)
+    scored_plan = stage_scored(inputs, cfg, model)
     # First pass pays whole-stage codegen compilation, Python worker spin-up,
     # AQE statistics; steady-state = median of three subsequent passes — the
     # figure comparable across parallelism levels (and to the reference's
@@ -240,19 +194,16 @@ def main() -> None:
         walls.append(time.monotonic() - t0)
     score_wall = sorted(walls)[1]
     timings["er_score"] = round(score_wall, 3)
-    scored = scored_plan.persist()
-    scored.count()
+    scored = scored_plan.localCheckpoint()
 
     t0 = time.monotonic()
-    clusters = cluster_records(records, scored, model.edge_threshold)
+    clusters = stage_clusters(records, vectors, pairs, scored, cfg, model)
     n_clusters = clusters.select("cluster_id").distinct().count()
     timings["er_cluster"] = round(time.monotonic() - t0, 3)
 
     # Quality at bench scale, STRICT form: labeled true pairs the blocker
     # never produced count as misses (the north-rule form, "at identical
     # blocking keys", only scores pairs sharing a block — this is harder).
-    from entity_resolver_spark.plans.pipeline import evaluate_pairs
-
     labeled = spark.createDataFrame(data["labeled_pairs"])
     f1_strict = round(evaluate_pairs(scored, labeled)["f1"], 4)
 
@@ -288,21 +239,11 @@ def main() -> None:
         )
         ttr = datagen.to_spark(spark, tdata["transcripts"]).repartition(max(cpus, 8))
         trec = build_entity_records(ttr).drop(*_DEAD_DOWNSTREAM).localCheckpoint()
-        tpairs = candidate_pairs(trec).localCheckpoint()
+        tpairs = stage_pairs(trec, cfg)[0].localCheckpoint()
         n_tpairs = tpairs.count()
-        tvec = text_vectors(trec, EngineConfig()).localCheckpoint()
-        tvec.count()
-        # Layout on the pairs input, not the stage output — see the
-        # er_pair_inputs comment (range-sampling recomputes its child).
-        tinputs = pair_inputs(
-            tpairs.repartitionByRange(
-                max(cpus, min(4 * cpus, 1 + n_tpairs // 65536)), "left", "right"
-            ),
-            trec,
-            vectors=tvec,
-        ).localCheckpoint()
-        tinputs.count()
-        tplan = score_pairs(features_from_inputs(tinputs), model)
+        tvec = text_vectors(trec, cfg).localCheckpoint()
+        tinputs = stage_pair_inputs(tpairs, trec, tvec, cfg).localCheckpoint()
+        tplan = stage_scored(tinputs, cfg, model)
         tplan.write.format("noop").mode("overwrite").save()  # warm
         tws = []
         for _ in range(3):

@@ -127,7 +127,7 @@ BROADCAST_MAX_RECORDS = 1_000_000
 # Above the unconditional-broadcast floor the decision is BYTE-budgeted:
 # a row count is a memory bound in the wrong unit. Measured at the first
 # corpus to cross the old 1M-row cap (288k entities -> 1,007,901 records,
-# 95.56M pairs, local[16], scripts/pair_inputs_ab.py full_bcast/full_shuf):
+# 95.56M pairs, local[16], forced-strategy A/B in COVERAGE.md, Round 5 item 12):
 # the side table is ~27.8 avg map entries/row ≈ ~1.06 KB/row estimated
 # (~521 MB parquet), and the forced-broadcast plan ran 351s vs 535s for the
 # shuffled sort-merge form — the auto-switch to shuffle at 1.008M rows cost

@@ -1,13 +1,22 @@
 """End-to-end resolution pipeline: normalize -> block -> score -> cluster.
 
 The reference's orchestrator runs an ordered stage list with a state tracker
-and per-stage checkpoints (/root/reference/src/orchestrating.py:70-84,
-src/checkpoint_manager.py:100-158). Here each stage is a DataFrame plan whose
-output commits to a Warehouse table; a resumed ``run()`` skips completed
-stages (stage-level resume). Pair-level resume — the analogue of the
-reference's processed_ids checkpoint (src/classifying.py:717) — lives in
-``run_incremental``, which left_anti-joins fresh candidate pairs against the
-committed pair set and scores only the difference.
+and per-stage checkpoints (reference src/orchestrating.py:70-84,
+src/checkpoint_manager.py:100-158). Here the block -> score -> cluster chain
+is four module-level stage builders (``stage_pairs``, ``stage_pair_inputs``,
+``stage_scored``, ``stage_clusters``), each taking its upstream frames and
+returning the stage frame. Every caller runs that one chain and only chooses
+how a stage output is materialized: ``ResolutionPipeline.run`` commits each
+one to a Warehouse table (a resumed ``run()`` skips completed stages —
+stage-level resume), ``run_incremental`` commits the fold's tables the same
+way, and ``bench.py`` localCheckpoints them in memory. Pair-level resume —
+the analogue of the reference's processed_ids checkpoint
+(src/classifying.py:717) — lives in ``run_incremental``, which
+left_anti-joins fresh candidate pairs against the committed pair set and
+scores only the difference.
+
+The builders call operators through this module's globals, so a caller
+that patches ``pipeline.<operator>`` sees every call of every path.
 """
 
 from __future__ import annotations
@@ -30,7 +39,6 @@ from entity_resolver_spark.operators.clustering import cluster_records
 from entity_resolver_spark.operators.enhancement import enhance_matches
 from entity_resolver_spark.operators.features import (
     features_from_inputs,
-    pair_features,
     pair_inputs,
     text_vectors,
 )
@@ -41,13 +49,86 @@ from entity_resolver_spark.operators.transcripts import (
 )
 from entity_resolver_spark.sources.catalog import Warehouse
 
-STAGES = ["records", "vectors", "pairs", "pair_inputs", "scored", "clusters"]
-
-
 @dataclass
 class PipelineResult:
     clusters: DataFrame
     metrics: list[dict]
+
+
+# -- stage builders ---------------------------------------------------------
+
+
+def stage_pairs(records: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, dict]:
+    """Candidate pairs of ``records``, and the ``pairs_skew_guard`` metrics
+    row (hot blocks and the pairs their split forgoes).
+
+    The key battery is materialized once: the skew-guard metric and the
+    split both consume it. This localCheckpoint — like the ones inside the
+    blocking passes — stores blocks on executors only, so an executor loss
+    mid-stage fails the stage. The pipeline commits the stage output as a
+    table, and that commit is the durable checkpoint: a retry re-runs this
+    one stage from the committed ``records``. The CC loop is the exception
+    (unbounded rounds inside one stage); that is what cc_reliable_every is
+    for."""
+    blocks = all_blocks(records, cfg).localCheckpoint()
+    hb = hot_block_metrics(blocks, cfg).collect()[0]
+    guard = {
+        "stage": "pairs_skew_guard",
+        "n_hot_blocks": int(hb["n_hot_blocks"]),
+        "hot_rows": int(hb["hot_rows"]),
+        "forgone_pairs": int(hb["forgone_pairs"]),
+    }
+    pairs = pairs_from_blocks(split_hot_blocks(blocks, cfg, materialized=True))
+    return pairs, guard
+
+
+def stage_pair_inputs(
+    pairs: DataFrame, records: DataFrame, vectors: DataFrame, cfg: EngineConfig
+) -> DataFrame:
+    """Joined pair inputs: the broadcast build is paid once here, and
+    scoring is a pure map over this frame.
+
+    Layout: the output is sorted within partitions by (left, right). The
+    scorer's per-Arrow-batch factorize dedup collapses repeated name-key
+    pairs, and that needs same-left adjacency — measured 1.39x on the
+    scoring pass against an unordered table and 1.9x against a round-robin
+    scatter (COVERAGE.md, Round 5 §1(c)). The pipeline, the fold and the
+    bench all take this one layout, so every scoring pass over a stored
+    stage table (retrains, threshold sweeps, fold re-scores) inherits it."""
+    return pair_inputs(pairs, records, cfg, vectors=vectors).sortWithinPartitions(
+        "left", "right"
+    )
+
+
+def stage_scored(inputs: DataFrame, cfg: EngineConfig, model: Model) -> DataFrame:
+    """Features and classifier over the joined pair inputs."""
+    return score_pairs(features_from_inputs(inputs, cfg), model)
+
+
+def stage_clusters(
+    records: DataFrame,
+    vectors: DataFrame,
+    pairs: DataFrame,
+    scored: DataFrame,
+    cfg: EngineConfig,
+    model: Model,
+) -> DataFrame:
+    """Strict clusters over the scored edges.
+
+    G3 match enhancement (reference-disabled default "none") adds verified
+    transitive and singleton-rescue edges at confidence 0.60, unioned BEFORE
+    the edge-threshold filter: like the reference, they only shape clusters
+    when the edge threshold admits them. ``scored`` and ``pairs`` must be
+    the whole edge and candidate sets — the fold passes its merged tables,
+    so an incremental run with enhancement matches a batch run."""
+    edges = scored
+    if cfg.enhancement_aggressiveness != "none":
+        extra = enhance_matches(records, scored, pairs, cfg, vectors=vectors)
+        edges = scored.unionByName(extra.select(*scored.columns))
+    edge_t = max(cfg.min_edge_confidence, model.edge_threshold)
+    return cluster_records(
+        records, edges, edge_t, reliable_every=cfg.cc_reliable_every
+    )
 
 
 class ResolutionPipeline:
@@ -65,17 +146,18 @@ class ResolutionPipeline:
         self.metrics: list[dict] = []
 
     # ------------------------------------------------------------------
+    def _log(self, row: dict) -> None:
+        self.metrics.append(row)
+        self.wh.append_metrics([row])
+
     def _run_stage(self, name: str, build, resume: bool) -> DataFrame:
         state = self.wh.load_state()
         if resume and name in state["completed"] and self.wh.exists(name):
             return self.wh.read(name)
         t0 = time.monotonic()
-        df = build()
-        stats = self.wh.write(name, df)
+        stats = self.wh.write(name, build())
         row = {"stage": name, **stats, "total_ms": int((time.monotonic() - t0) * 1000)}
-        self.metrics.append(row)
-        self.wh.append_metrics([row])
-        state = self.wh.load_state()
+        self._log(row)
         if name not in state["completed"]:
             state["completed"].append(name)
         state["stages"][name] = row
@@ -84,88 +166,34 @@ class ResolutionPipeline:
 
     # ------------------------------------------------------------------
     def run(self, transcripts: DataFrame, resume: bool = True) -> PipelineResult:
-        cfg = self.cfg
+        cfg, model = self.cfg, self.model
 
         records = self._run_stage(
             "records", lambda: build_entity_records(transcripts), resume
         )
-
         vectors = self._run_stage(
             "vectors", lambda: text_vectors(records, cfg), resume
         )
 
         def build_pairs() -> DataFrame:
-            # materialize the key battery once: the skew-guard metric and the
-            # split both consume it.
-            #
-            # Durability note (cluster scale): this localCheckpoint — and the
-            # ones inside the blocking passes (the distinct-shingle table,
-            # the rare-shingle hot set, split_hot_blocks' sizes) — store
-            # blocks on executors only; an executor loss mid-stage
-            # fails the stage. That is acceptable HERE because the whole
-            # "pairs" stage is wrapped by _run_stage, whose Warehouse
-            # two-rename commit is itself the durable checkpoint: a retry
-            # re-runs this one stage from the committed `records` table, not
-            # the whole pipeline. The CC loop is the exception (unbounded
-            # rounds inside one stage) — that's what cc_reliable_every is
-            # for.
-            blocks = all_blocks(records, cfg).localCheckpoint()
-            hb = hot_block_metrics(blocks, cfg).collect()[0]
-            row = {
-                "stage": "pairs_skew_guard",
-                "n_hot_blocks": int(hb["n_hot_blocks"]),
-                "hot_rows": int(hb["hot_rows"]),
-                "forgone_pairs": int(hb["forgone_pairs"]),
-            }
-            self.metrics.append(row)
-            self.wh.append_metrics([row])
-            return pairs_from_blocks(
-                split_hot_blocks(blocks, cfg, materialized=True)
-            )
+            pairs, guard = stage_pairs(records, cfg)
+            self._log(guard)
+            return pairs
 
         pairs = self._run_stage("pairs", build_pairs, resume)
-
-        # joined pair inputs are a stage of their own: the broadcast build is
-        # paid once here; scoring below is a pure map over this table. The
-        # stage is WRITTEN IN PAIR-KEY RANGE ORDER: the scorer's per-Arrow-
-        # batch factorize dedup collapses repeated name-key pairs, and that
-        # needs same-left adjacency in the stored layout — measured 1.39x on
-        # the scoring pass vs an unordered table, and 1.9x vs a round-robin
-        # scatter (scripts/layout_ab.py; BENCH/PROTOCOL_LOG.md). Sorting once
-        # at stage-write time means EVERY downstream scoring pass (retrains,
-        # threshold sweeps, incremental re-scores) inherits the layout — the
-        # 100-TB economics of the compact stage table depend on it.
         inputs = self._run_stage(
             "pair_inputs",
-            lambda: pair_inputs(pairs, records, cfg, vectors=vectors)
-            .sortWithinPartitions("left", "right"),
+            lambda: stage_pair_inputs(pairs, records, vectors, cfg),
             resume,
         )
-
         scored = self._run_stage(
-            "scored",
-            lambda: score_pairs(features_from_inputs(inputs, cfg), self.model),
+            "scored", lambda: stage_scored(inputs, cfg, model), resume
+        )
+        clusters = self._run_stage(
+            "clusters",
+            lambda: stage_clusters(records, vectors, pairs, scored, cfg, model),
             resume,
         )
-
-        edge_t = max(cfg.min_edge_confidence, self.model.edge_threshold)
-
-        def build_clusters() -> DataFrame:
-            edges = scored
-            # G3 match enhancement (reference-disabled default "none"):
-            # verified transitive + singleton-rescue edges at confidence
-            # 0.60, unioned BEFORE the edge_t filter — like the reference,
-            # they only shape clusters when the edge threshold admits them.
-            if cfg.enhancement_aggressiveness != "none":
-                extra = enhance_matches(
-                    records, scored, pairs, cfg, vectors=vectors
-                )
-                edges = scored.unionByName(extra.select(*scored.columns))
-            return cluster_records(
-                records, edges, edge_t, reliable_every=cfg.cc_reliable_every
-            )
-
-        clusters = self._run_stage("clusters", build_clusters, resume)
         return PipelineResult(clusters=clusters, metrics=self.metrics)
 
     # ------------------------------------------------------------------
@@ -186,8 +214,14 @@ class ResolutionPipeline:
         re-delivered conversation is re-blocked and re-scored against the new
         text — stale edges from the previous delivery cannot leak into
         clustering.
+
+        The fold scores only the new pairs, so it does not keep the
+        ``pair_inputs`` table current: before anything is rewritten the
+        table is dropped and leaves the completed stages, and a later
+        resumed ``run()`` rebuilds it (and whatever it re-scores) from the
+        folded pair set.
         """
-        cfg = self.cfg
+        cfg, model = self.cfg, self.model
         for stage in ("records", "vectors", "pairs", "scored"):
             if not self.wh.exists(stage):
                 raise ValueError(
@@ -195,79 +229,76 @@ class ResolutionPipeline:
                 )
         t0 = time.monotonic()
         new_records = build_entity_records(new_transcripts)
-        old_records = self.wh.read("records")
         new_ids = new_records.select("conv_id")
-        records = old_records.join(new_ids, "conv_id", "left_anti").unionByName(
-            new_records
-        )
-        stats = self.wh.write("records", records)
-        records = self.wh.read("records")
-        self.metrics.append({"stage": "records_incr", **stats})
+        old_records = self.wh.read("records")
+        # Retract everything touching a re-delivered conv_id: pairs scored
+        # against the OLD text must not survive the unions below, and block
+        # edges the new text no longer produces must disappear.
+        old_pairs = _retract(self.wh.read("pairs"), new_ids)
+        old_scored = _retract(self.wh.read("scored"), new_ids)
+        state = self.wh.load_state()
+        if "pair_inputs" in state["completed"]:
+            state["completed"].remove("pair_inputs")
+            state["stages"].pop("pair_inputs", None)
+            self.wh.save_state(state)
+        self.wh.drop("pair_inputs")
 
+        records = self._run_stage(
+            "records",
+            lambda: old_records.join(new_ids, "conv_id", "left_anti").unionByName(
+                new_records
+            ),
+            resume=False,
+        )
         vectors = self._run_stage(
             "vectors", lambda: text_vectors(records, cfg), resume=False
         )
 
-        # Retract everything touching a re-delivered conv_id: pairs scored
-        # against the OLD text must not survive the union below, and block
-        # edges the new text no longer produces must disappear.
-        old_pairs = _retract(self.wh.read("pairs"), new_ids)
-        # lineage cut: the key battery is scanned by the split's sizes join
-        # AND the split output three times below (semi-join probe, touched
-        # expansion, pair join) — materialize both once
-        raw_blocks = all_blocks(records, cfg).localCheckpoint()
-        blocks = split_hot_blocks(
-            raw_blocks, cfg, materialized=True
-        ).localCheckpoint()
-        new_blocks = blocks.join(new_ids, "conv_id", "left_semi")
-        touched = (
-            new_blocks.select("block_key").distinct().join(blocks, "block_key")
-        )
-        # touched is a SUBSET of the block table: two old records that meet
-        # in a touched block may share a t: block that is not touched, so
-        # the subsumption stamp's precondition fails — pair without it. No
-        # lineage cut needed: `blocks` is already checkpointed.
-        cand = pairs_from_blocks(touched.drop("_st"), materialize=False)
-        fresh_pairs = cand.join(
-            old_pairs.select("left", "right"), ["left", "right"], "left_anti"
-        )
-        stats = self.wh.write("pairs_new", fresh_pairs)
-        fresh_pairs = self.wh.read("pairs_new")
-        self.metrics.append({"stage": "pairs_incr", **stats})
+        def build_fresh_pairs() -> DataFrame:
+            # lineage cut: the key battery is scanned by the split's sizes
+            # join AND the split output three times below (semi-join probe,
+            # touched expansion, pair join) — materialize both once
+            raw_blocks = all_blocks(records, cfg).localCheckpoint()
+            blocks = split_hot_blocks(
+                raw_blocks, cfg, materialized=True
+            ).localCheckpoint()
+            new_blocks = blocks.join(new_ids, "conv_id", "left_semi")
+            touched = (
+                new_blocks.select("block_key").distinct().join(blocks, "block_key")
+            )
+            # touched is a SUBSET of the block table: two old records that
+            # meet in a touched block may share a t: block that is not
+            # touched, so the subsumption stamp's precondition fails — pair
+            # without it. No lineage cut needed: `blocks` is checkpointed.
+            cand = pairs_from_blocks(touched.drop("_st"), materialize=False)
+            return cand.join(
+                old_pairs.select("left", "right"), ["left", "right"], "left_anti"
+            )
 
-        old_scored = _retract(self.wh.read("scored"), new_ids)
-        fresh_scored = score_pairs(
-            pair_features(fresh_pairs, records, cfg, vectors=vectors), self.model
+        fresh_pairs = self._run_stage("pairs_new", build_fresh_pairs, resume=False)
+        scored = self._run_stage(
+            "scored",
+            lambda: old_scored.unionByName(
+                stage_scored(
+                    stage_pair_inputs(fresh_pairs, records, vectors, cfg), cfg, model
+                )
+            ),
+            resume=False,
         )
-        scored = old_scored.unionByName(fresh_scored)
-        stats = self.wh.write("scored", scored)
-        scored = self.wh.read("scored")
-        self.metrics.append({"stage": "scored_incr", **stats})
-        self.wh.write(
-            "pairs", old_pairs.unionByName(self.wh.read("pairs_new"))
+        pairs = self._run_stage(
+            "pairs", lambda: old_pairs.unionByName(fresh_pairs), resume=False
         )
-
-        edge_t = max(cfg.min_edge_confidence, self.model.edge_threshold)
-        # G3 enhancement must see the MERGED scored/pair sets, exactly like a
-        # batch run over the same corpus — the reference applies enhancement
-        # unconditionally inside _generate_clusters, so an incremental run
-        # with --enhancement must not silently diverge from a batch run
-        # (judge advice, round 4).
-        edges = scored
-        if cfg.enhancement_aggressiveness != "none":
-            all_pairs = self.wh.read("pairs")
-            extra = enhance_matches(records, scored, all_pairs, cfg, vectors=vectors)
-            edges = scored.unionByName(extra.select(*scored.columns))
-        clusters = cluster_records(
-            records, edges, edge_t, reliable_every=cfg.cc_reliable_every
+        clusters = self._run_stage(
+            "clusters",
+            lambda: stage_clusters(records, vectors, pairs, scored, cfg, model),
+            resume=False,
         )
-        stats = self.wh.write("clusters", clusters)
-        self.metrics.append({"stage": "clusters_incr", **stats})
-        row = {"stage": "run_incremental", "rows": stats["rows"],
-               "wall_ms": int((time.monotonic() - t0) * 1000)}
-        self.metrics.append(row)
-        self.wh.append_metrics(self.metrics)
-        return PipelineResult(clusters=self.wh.read("clusters"), metrics=self.metrics)
+        self._log({
+            "stage": "run_incremental",
+            "rows": self.metrics[-1]["rows"],
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+        })
+        return PipelineResult(clusters=clusters, metrics=self.metrics)
 
     # ------------------------------------------------------------------
     def write_report(

@@ -74,6 +74,20 @@ def _warm_session(spark: SparkSession) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half of physical
+    memory (``phys_bytes``, default this machine's), capped at 24g and
+    floored at 1g. In local mode the driver JVM also hosts every executor
+    thread, so its heap is most of the engine's memory — yet a heap sized
+    past physical memory is not an error, just an OOM kill later (a 24g
+    default on a 15 GB machine let a 24k-entity blocking run grow to
+    11.7 GB resident before the kernel killed it)."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mib = min(max(phys_bytes // 2 // 2**20, 1024), 24 * 1024)
+    return f"{mib}m"
+
+
 def get_spark(
     app_name: str = "entity_resolver_spark",
     master: str | None = None,
@@ -140,7 +154,10 @@ def get_spark(
         # maps) — small against executor memory at any scale.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")
     )

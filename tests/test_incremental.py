@@ -3,8 +3,11 @@ and the result matches a from-scratch run on the union."""
 
 from __future__ import annotations
 
+import dataclasses
+import shutil
+from collections import Counter
+
 import pytest
-from pyspark.sql import functions as F
 
 from entity_resolver_spark import datagen
 from entity_resolver_spark.config import EngineConfig
@@ -22,20 +25,35 @@ def _split_corpus(spark):
     return pdf, old_set, first, second
 
 
-def test_incremental_matches_full_run(spark, tmp_path):
+# With enhancement on, the edge threshold sits below the enhanced edges'
+# 0.60 confidence, and a strict decision threshold leaves records the
+# classifier does not match for singleton rescue to pick up: on this corpus
+# a batch run then gives 71 clusters without enhancement and 31 with it, so
+# both paths must reach the same enhanced edges to agree.
+ENHANCEMENT = {
+    "none": (EngineConfig(), Model.default()),
+    "moderate": (
+        EngineConfig(enhancement_aggressiveness="moderate", min_edge_confidence=0.55),
+        dataclasses.replace(Model.default(), threshold=0.98, edge_threshold=0.55),
+    ),
+}
+
+
+@pytest.mark.parametrize("enhancement", sorted(ENHANCEMENT))
+def test_incremental_matches_full_run(spark, tmp_path, enhancement):
     pdf, old_set, first, second = _split_corpus(spark)
     full = datagen.to_spark(spark, pdf)
-    model = Model.default()
+    cfg, model = ENHANCEMENT[enhancement]
 
     # incremental: run on first batch, fold in second
-    pipe = ResolutionPipeline(spark, str(tmp_path / "incr"), model=model)
+    pipe = ResolutionPipeline(spark, str(tmp_path / "incr"), cfg=cfg, model=model)
     pipe.run(first, resume=False)
     n_old_pairs = pipe.wh.read("pairs").count()
     result = pipe.run_incremental(second)
     incr_clusters = sorted(map(tuple, result.clusters.collect()))
 
     # from-scratch on the union
-    pipe2 = ResolutionPipeline(spark, str(tmp_path / "full"), model=model)
+    pipe2 = ResolutionPipeline(spark, str(tmp_path / "full"), cfg=cfg, model=model)
     full_clusters = sorted(map(tuple, pipe2.run(full, resume=False).clusters.collect()))
 
     assert incr_clusters == full_clusters
@@ -87,3 +105,42 @@ def test_fold_pairs_cover_batch_pairs_with_hot_blocks(spark, tmp_path):
 
     assert batch <= folded
     assert folded - batch <= pre_fold
+
+
+@pytest.fixture(scope="module")
+def folded(spark, tmp_path_factory):
+    """One pipeline object that ran a batch and then folded the rest in."""
+    _, _, first, second = _split_corpus(spark)
+    pipe = ResolutionPipeline(spark, str(tmp_path_factory.mktemp("folded")))
+    pipe.run(first, resume=False)
+    result = pipe.run_incremental(second)
+    return pipe, first, sorted(map(tuple, result.clusters.collect()))
+
+
+def test_fold_appends_each_metrics_row_once(folded):
+    """The `_metrics` table holds exactly the rows the pipeline object
+    logged, batch and fold together — no row is appended twice."""
+    pipe, _, _ = folded
+    table = Counter(r["stage"] for r in pipe.wh.read("_metrics").collect())
+    assert table == Counter(m["stage"] for m in pipe.metrics)
+    assert table["pairs_skew_guard"] == 1 and table["vectors"] == 2
+
+
+def test_resume_after_fold_scores_the_folded_pairs(spark, folded, tmp_path):
+    """A resumed run after a fold rebuilds its dropped stages from the
+    folded pair set, not from a pair_inputs table the fold left stale."""
+    pipe, first, fold_clusters = folded
+    wh = str(tmp_path / "resume")
+    shutil.copytree(pipe.wh.root, wh)
+    resumed = ResolutionPipeline(spark, wh)
+    state = resumed.wh.load_state()
+    state["completed"] = [
+        s for s in state["completed"] if s not in ("scored", "clusters")
+    ]
+    resumed.wh.save_state(state)
+    resumed.wh.drop("scored")
+    resumed.wh.drop("clusters")
+
+    result = resumed.run(first, resume=True)
+    assert resumed.wh.read("scored").count() == resumed.wh.read("pairs").count()
+    assert sorted(map(tuple, result.clusters.collect())) == fold_clusters
