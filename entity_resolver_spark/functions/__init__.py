@@ -5,7 +5,6 @@ from entity_resolver_spark.functions.normalize import (  # noqa: F401
 )
 from entity_resolver_spark.functions.similarity import (  # noqa: F401
     cosine_expr,
-    cosine_pudf,
     jaro_winkler_pudf,
     levenshtein_sim_expr,
 )

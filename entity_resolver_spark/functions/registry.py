@@ -43,10 +43,6 @@ def get_feature(name: str) -> FeatureBuilder:
     return _REGISTRY[name]
 
 
-def list_features() -> list[str]:
-    return sorted(_REGISTRY)
-
-
 def build_features(
     specs: list[dict], l_prefix: str = "l_", r_prefix: str = "r_"
 ) -> list[Column]:

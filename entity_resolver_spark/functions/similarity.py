@@ -11,9 +11,9 @@ Reference parity:
   step a boolean matrix op over all rows at once — no per-row Python. The
   scalar ``jaro_winkler`` stays as the test oracle.
 * Cosine — /root/reference/src/feature_engineering.py:581-657 (dot/(|a||b|),
-  clamped to [0,1], 1.0 when both effectively zero). Two implementations:
-  a native expression over array<double> (zip_with + aggregate, codegen'd)
-  and a numpy pandas UDF (fast path for wide vectors).
+  clamped to [0,1], 1.0 when both effectively zero): a native expression
+  over array<double> (zip_with + aggregate, codegen'd), and a numpy pandas
+  UDF over the sparse map<int,double> vectors the pair features use.
 """
 
 from __future__ import annotations
@@ -343,35 +343,6 @@ def sparse_cosine_pudf(
         B[rows_b[sb:eb] - s, kb[sb:eb]] = vb[sb:eb]
         res[s:e] = np.einsum("ij,ij->i", A[:n_rows], B[:n_rows])
     out[keep] = np.clip(res, 0.0, 1.0)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.DoubleType())
-def cosine_pudf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Numpy-vectorized cosine over dense array columns: stack the batch into
-    (n, dim) matrices, fused row-dot + norms — no per-row Python. Fast path
-    for wide fixed-dim embedding vectors."""
-    n = len(a)
-    out = np.full(n, np.nan, dtype=np.float64)
-    av, bv = a.to_numpy(), b.to_numpy()
-    keep = np.fromiter(
-        (x is not None and y is not None for x, y in zip(av, bv)), bool, n
-    )
-    m = int(keep.sum())
-    if m == 0:
-        return pd.Series(out)
-    A = np.stack([np.asarray(x, dtype=np.float64) for x in av[keep]])
-    B = np.stack([np.asarray(x, dtype=np.float64) for x in bv[keep]])
-    dots = np.einsum("ij,ij->i", A, B)
-    na = np.sqrt(np.einsum("ij,ij->i", A, A))
-    nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-    eps = 1e-10
-    both_zero = (na < eps) & (nb < eps)
-    one_zero = ((na < eps) | (nb < eps)) & ~both_zero
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.clip(dots / (na * nb), 0.0, 1.0)
-    cos = np.where(both_zero, 1.0, np.where(one_zero, 0.0, cos))
-    out[keep] = cos
     return pd.Series(out)
 
 

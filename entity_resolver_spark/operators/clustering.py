@@ -277,15 +277,3 @@ def cluster_records(
     return _label_components(ids, roots).select(
         F.col("id").alias("conv_id"), F.col("component").alias("cluster_id")
     )
-
-
-def cluster_stats(clusters: DataFrame) -> DataFrame:
-    """Cluster size distribution (reference reports sizes/averages,
-    src/classifying.py:2277-2282)."""
-    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_clusters"),
-        F.max("size").alias("max_size"),
-        F.avg("size").alias("avg_size"),
-        F.sum((F.col("size") == 1).cast("int")).alias("n_singletons"),
-    )

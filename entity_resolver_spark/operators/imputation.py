@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from entity_resolver_spark.config import EngineConfig
 from entity_resolver_spark.functions.hashing import sparse_cosine_expr
 
 
@@ -219,29 +218,3 @@ def audit_attribute(
         "current_score",
         "n_donors",
     )
-
-
-def impute_conversation_tools(
-    transcripts: DataFrame, records: DataFrame, vectors: DataFrame, cfg: EngineConfig | None = None
-) -> DataFrame:
-    """Concrete use: impute the dominant ``tool`` for conversations that
-    never called one, from textually-similar conversations that did."""
-    from entity_resolver_spark.operators.blocking import all_blocks, split_hot_blocks
-
-    cfg = cfg or EngineConfig()
-    # per-conversation modal tool (count per (conv, tool) -> rank 1)
-    tool_of = (
-        transcripts.where(F.col("tool").isNotNull())
-        .groupBy("conv_id", "tool")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("conv_id").orderBy(F.desc("n"), F.asc("tool"))
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("conv_id", F.col("tool").alias("attr"))
-    )
-    blocks = split_hot_blocks(all_blocks(records, cfg), cfg)
-    return impute_attribute(records, vectors, tool_of, blocks)

@@ -23,7 +23,7 @@ arrays with the taxonomy broadcast as literals — no UDFs, no driver lookups.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Default tool taxonomy: child -> parent. Mirrors the reference's
@@ -102,34 +102,4 @@ def taxonomy_dissimilarity_expr(
             F.lit(SCORE_UNMAPPED),
         )
         .otherwise(F.array_min(cross))
-    )
-
-
-def conversation_categories(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, categories array<string>) — distinct tools used."""
-    return (
-        transcripts.where(F.col("tool").isNotNull())
-        .groupBy("conv_id")
-        .agg(F.array_distinct(F.collect_list("tool")).alias("categories"))
-    )
-
-
-def pair_taxonomy_feature(
-    pairs: DataFrame,
-    transcripts: DataFrame,
-    taxonomy: dict[str, str] | None = None,
-) -> DataFrame:
-    """pairs(left, right) -> + taxonomy_dissimilarity column (J9: broadcast
-    join of the tiny category table to both pair sides)."""
-    cats = conversation_categories(transcripts)
-    cl = F.broadcast(cats.select(F.col("conv_id").alias("left"), F.col("categories").alias("l_cats")))
-    cr = F.broadcast(cats.select(F.col("conv_id").alias("right"), F.col("categories").alias("r_cats")))
-    return (
-        pairs.join(cl, "left", "left")
-        .join(cr, "right", "left")
-        .withColumn(
-            "taxonomy_dissimilarity",
-            taxonomy_dissimilarity_expr(F.col("l_cats"), F.col("r_cats"), taxonomy),
-        )
-        .drop("l_cats", "r_cats")
     )

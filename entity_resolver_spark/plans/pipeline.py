@@ -369,10 +369,13 @@ class ResolutionPipeline:
 
 
 def _retract(pairs: DataFrame, ids: DataFrame) -> DataFrame:
-    """Pair rows with neither side in ``ids`` (a one-column conv_id frame)."""
-    return pairs.join(
-        ids.withColumnRenamed("conv_id", "left"), "left", "left_anti"
-    ).join(ids.withColumnRenamed("conv_id", "right"), "right", "left_anti")
+    """Pair rows with neither side in ``ids`` (a one-column conv_id frame),
+    in ``pairs``' column order (a using-column join puts its key first)."""
+    return (
+        pairs.join(ids.withColumnRenamed("conv_id", "left"), "left", "left_anti")
+        .join(ids.withColumnRenamed("conv_id", "right"), "right", "left_anti")
+        .select(*pairs.columns)
+    )
 
 
 def evaluate_pairs(scored: DataFrame, labeled: DataFrame) -> dict:

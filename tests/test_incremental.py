@@ -57,6 +57,9 @@ def test_incremental_matches_full_run(spark, tmp_path, enhancement):
     full_clusters = sorted(map(tuple, pipe2.run(full, resume=False).clusters.collect()))
 
     assert incr_clusters == full_clusters
+    # the fold commits its pair tables in the batch run's column order
+    for t in ("pairs", "scored"):
+        assert pipe.wh.read(t).columns == pipe2.wh.read(t).columns, t
     # incremental really did skip the old pairs: fresh pair set is disjoint
     fresh = pipe.wh.read("pairs_new")
     old = spark.read.parquet(str(tmp_path / "incr" / "pairs")).drop("_pid")

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from entity_resolver_spark.functions.similarity import (
     cosine_expr,
-    cosine_pudf,
     jaro_winkler,
     jaro_winkler_pudf,
     levenshtein_sim_expr,
@@ -65,7 +64,6 @@ def test_cosine_expr_and_pudf_match_numpy(spark):
     rows = df.select(
         "a", "b",
         cosine_expr(F.col("a"), F.col("b")).alias("native"),
-        cosine_pudf(F.col("a"), F.col("b")).alias("pudf"),
     ).collect()
     for r in rows:
         a, b = np.array(r["a"]), np.array(r["b"])
@@ -77,7 +75,6 @@ def test_cosine_expr_and_pudf_match_numpy(spark):
         else:
             expected = min(max(float(a @ b) / (na * nb), 0.0), 1.0)
         assert r["native"] == pytest.approx(expected, abs=1e-9)
-        assert r["pudf"] == pytest.approx(expected, abs=1e-9)
 
 
 def test_jaro_winkler_pudf_nul_bytes(spark):

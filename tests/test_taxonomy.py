@@ -7,12 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from entity_resolver_spark.operators.features import pair_inputs
 from entity_resolver_spark.operators.taxonomy import (
     DEFAULT_TAXONOMY,
-    pair_taxonomy_feature,
     prune_parents,
     taxonomy_dissimilarity_expr,
 )
+from entity_resolver_spark.operators.transcripts import build_entity_records
 
 
 def _score(spark, l, r):
@@ -59,6 +60,8 @@ def test_parent_pruned_when_child_present(spark):
 
 
 def test_pair_feature_join(spark):
+    """The pipeline's path: build_entity_records collects each
+    conversation's tools as its categories, pair_inputs scores them."""
     transcripts = spark.createDataFrame(
         [
             ("c1", 0, "tool", "x", "search_catalog", None),
@@ -70,7 +73,7 @@ def test_pair_feature_join(spark):
     pairs = spark.createDataFrame([("c1", "c2"), ("c1", "c3")], ["left", "right"])
     out = {
         (r["left"], r["right"]): r["taxonomy_dissimilarity"]
-        for r in pair_taxonomy_feature(pairs, transcripts).collect()
+        for r in pair_inputs(pairs, build_entity_records(transcripts)).collect()
     }
     assert out[("c1", "c2")] == pytest.approx(0.3)
     assert out[("c1", "c3")] == pytest.approx(0.5)  # c3 has no tools
