@@ -616,8 +616,8 @@ def q_er_impute(spark, sf_dir):
     cfg = EngineConfig()
     t = derive_transcripts(spark, sf_dir)
     records = build_entity_records(t).localCheckpoint()
-    vectors = text_vectors(records, cfg)
-    blocks = split_hot_blocks(all_blocks(records, cfg), cfg)
+    vectors = text_vectors(records)
+    blocks = split_hot_blocks(all_blocks(records, cfg).localCheckpoint(), cfg)
     doc_num = F.substring("conv_id", 2, 10).cast("int")
     attrs = records.select(
         "conv_id",

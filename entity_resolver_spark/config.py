@@ -7,7 +7,7 @@ same semantics with Spark-appropriate values.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Deterministic seed everywhere (reference: config.yml:4 `random_seed: 42`).
 SEED = 42
@@ -207,12 +207,12 @@ DEFAULT_BIAS = 0.5247
 
 @dataclass
 class EngineConfig:
-    seed: int = SEED
-    tf_dim: int = TF_DIM
-    minhash_hashes: int = MINHASH_HASHES
-    minhash_bands: int = MINHASH_BANDS
-    shingle_k: int = SHINGLE_K
-    shingle_sketch_k: int = SHINGLE_SKETCH_K
+    """The deployment and tuning settings a caller can set. The constants
+    above that are not fields here (SEED, TF_DIM, the MinHash and shingle
+    widths, YEAR_TOLERANCE, FEATURE_COLS, BROADCAST_ROW_FIXED_BYTES) are read
+    directly: most of them define the feature space DEFAULT_WEIGHTS was fit
+    on, so changing one without a retrain would mis-score every pair."""
+
     rare_shingle_max_df: int = RARE_SHINGLE_MAX_DF
     rare_shingle_k: int = RARE_SHINGLE_K
     max_block_size: int = MAX_BLOCK_SIZE
@@ -221,7 +221,4 @@ class EngineConfig:
     broadcast_max_records: int = BROADCAST_MAX_RECORDS
     broadcast_max_bytes: int = BROADCAST_MAX_BYTES
     broadcast_hard_max_records: int = BROADCAST_HARD_MAX_RECORDS
-    broadcast_row_fixed_bytes: int = BROADCAST_ROW_FIXED_BYTES
     min_edge_confidence: float = MIN_EDGE_CONFIDENCE
-    year_tolerance: int = YEAR_TOLERANCE
-    feature_cols: list[str] = field(default_factory=lambda: list(FEATURE_COLS))

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from entity_resolver_spark import config as C
 from entity_resolver_spark.config import EngineConfig
 from entity_resolver_spark.functions.hashing import lsh_band_keys, shingles_expr
 
@@ -153,9 +154,7 @@ def _shingle_hash_rows(records: DataFrame, cfg: EngineConfig) -> DataFrame:
     ).select("conv_id", F.xxhash64("_g").alias("_gh"), "skey").localCheckpoint()
 
 
-def minhash_blocks_from_shingle_rows(
-    sh: DataFrame, cfg: EngineConfig
-) -> DataFrame:
+def minhash_blocks_from_shingle_rows(sh: DataFrame) -> DataFrame:
     """Text-MinHash pass: banded-MinHash blocks (``m``) computed from the
     materialized ``_shingle_hash_rows`` table, so the text is not scanned
     and shingled a second time. Signature hashes re-hash the 64-bit
@@ -168,18 +167,18 @@ def minhash_blocks_from_shingle_rows(
     MinHash over DISTINCT shingles equals MinHash over the multiset — min()
     ignores multiplicity — so sharing the rare pass's distinct rows is
     exact. The Jaccard being estimated is over ``rare_shingle_k``-shingles
-    (4) rather than ``shingle_k`` (3); the banded-collision recall of that
+    (4) rather than ``SHINGLE_K`` (3); the banded-collision recall of that
     estimate is part of the measured blocking-recall gates."""
     aggs = [
         F.min(F.xxhash64(F.col("_gh"), F.lit(i))).alias(f"_h{i}")
-        for i in range(cfg.minhash_hashes)
+        for i in range(C.MINHASH_HASHES)
     ] + [F.first("skey").alias("skey")]
     sig = sh.groupBy("conv_id").agg(*aggs).select(
         "conv_id",
-        F.array(*[F.col(f"_h{i}") for i in range(cfg.minhash_hashes)]).alias("sig"),
+        F.array(*[F.col(f"_h{i}") for i in range(C.MINHASH_HASHES)]).alias("sig"),
         "skey",
     )
-    keys = lsh_band_keys(F.col("sig"), cfg.minhash_hashes, cfg.minhash_bands)
+    keys = lsh_band_keys(F.col("sig"), C.MINHASH_HASHES, C.MINHASH_BANDS)
     tagged = F.transform(keys, lambda k: F.concat(F.lit("m"), k))
     return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
 
@@ -190,7 +189,7 @@ def rare_shingle_blocks(sh: DataFrame, cfg: EngineConfig) -> DataFrame:
     ``rare_shingle_k``-shingle whose document frequency is
     <= ``rare_shingle_max_df`` (a cap <= 1 leaves no block of two members,
     so the pass emits nothing). The shingle here is LONGER than the
-    Jaccard-estimation shingles (``shingle_k``): rarity decays as the
+    Jaccard-estimation shingles (``SHINGLE_K``): rarity decays as the
     corpus grows over a bounded vocabulary, and the scale-correct response
     is a longer (more specific) shingle at the SAME df cap, not a higher
     cap — see the RARE_SHINGLE_K note in config.py for the 252k/504k-record
@@ -279,7 +278,7 @@ def all_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
     """
     out = _explode_keys(records, [_exact_key_array(), *_anchor_key_arrays()])
     sh = _shingle_hash_rows(records, cfg)
-    out = out.unionByName(minhash_blocks_from_shingle_rows(sh, cfg))
+    out = out.unionByName(minhash_blocks_from_shingle_rows(sh))
     return out.unionByName(rare_shingle_blocks(sh, cfg))
 
 
@@ -299,9 +298,7 @@ ORDERED_SPLIT_MULT = 32
 HOT_BROADCAST_MAX = 4_000_000
 
 
-def split_hot_blocks(
-    blocks: DataFrame, cfg: EngineConfig, materialized: bool = False
-) -> DataFrame:
+def split_hot_blocks(blocks: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Skew guard: blocks larger than ``max_block_size`` are split into
     sub-blocks; pair fan-out per block is bounded at ~cap^2.
 
@@ -330,17 +327,15 @@ def split_hot_blocks(
     so on a partial key battery without ``t:`` keys those pairs are
     silently dropped. Pass such a battery without ``skey`` (no stamp), or
     drop ``_st`` before ``pairs_from_blocks``.
+
+    The sizes aggregate and the join probe each scan ``blocks``, so pass a
+    materialized (checkpointed) key battery rather than its plan.
     """
     cap = cfg.max_block_size
     h = max(cap // 2, 1)
     mega = cap * ORDERED_SPLIT_MULT
     has_skey = "skey" in blocks.columns
     order = ["skey", "conv_id"] if has_skey else ["conv_id"]
-    if not materialized:
-        # the sizes aggregate and the join probe each scan `blocks`; an
-        # un-materialized key-battery plan must not be evaluated twice
-        # (callers that already checkpointed pass materialized=True)
-        blocks = blocks.localCheckpoint()
     # INVERTED size probe (r5): almost every block is small, so joining ALL
     # block rows against the full sizes table (40M x 22M at the 144k corpus,
     # 64s at local[16]) shuffles everything to route almost nothing. The HOT
@@ -541,7 +536,7 @@ def hot_block_metrics(blocks: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def pairs_from_blocks(blocks: DataFrame, materialize: bool = True) -> DataFrame:
+def pairs_from_blocks(blocks: DataFrame) -> DataFrame:
     """Canonicalized candidate pairs from (conv_id, block_key) rows.
 
     One self-equi-join on block_key; `<` ordering both de-duplicates within a
@@ -550,9 +545,9 @@ def pairs_from_blocks(blocks: DataFrame, materialize: bool = True) -> DataFrame:
     multiple passes — the reference unions within-group and cross-group pair
     sets the same way (src/classifying.py:1089-1130).
 
-    ``materialize`` (default) cuts the input's lineage with an eager
-    localCheckpoint before the self-join: the block rows are tiny, but their
-    PLAN is the whole multi-pass key computation — without the cut the join
+    Pass materialized blocks (e.g. the split output after
+    ``localCheckpoint``): the block rows are tiny, but their PLAN is the
+    whole multi-pass key computation — un-materialized, the self-join
     evaluates it once per side, and every downstream action re-analyzes the
     giant expression tree on the driver.
 
@@ -572,8 +567,6 @@ def pairs_from_blocks(blocks: DataFrame, materialize: bool = True) -> DataFrame:
     blocks = blocks.select(
         "conv_id", "block_key", *(["_st"] if has_st else [])
     )
-    if materialize:
-        blocks = blocks.localCheckpoint()
     a = blocks.alias("a")
     b = blocks.alias("b")
     joined = a.join(b, "block_key").where(
@@ -595,7 +588,7 @@ def pairs_from_blocks(blocks: DataFrame, materialize: bool = True) -> DataFrame:
 def candidate_pairs(records: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
     cfg = cfg or EngineConfig()
     blocks = all_blocks(records, cfg).localCheckpoint()
-    return pairs_from_blocks(split_hot_blocks(blocks, cfg, materialized=True))
+    return pairs_from_blocks(split_hot_blocks(blocks, cfg).localCheckpoint())
 
 
 def blocking_recall(pairs: DataFrame, labeled: DataFrame) -> float:

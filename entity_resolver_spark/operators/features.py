@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from entity_resolver_spark import config as C
 from entity_resolver_spark.config import EngineConfig
 from entity_resolver_spark.functions.hashing import (
     hashed_tf_vectors,
@@ -68,21 +69,21 @@ _SIDE_COLS = [
 _VEC_KEY = ["text_hash", "name_hash"]
 
 
-def text_vectors(records: DataFrame, cfg: EngineConfig) -> DataFrame:
+def text_vectors(records: DataFrame) -> DataFrame:
     """(text_hash, name_hash, vector) — hashed-TF per distinct
     (normalized text, extracted name) combination.
 
-    Uses ``context_tokens`` (text minus name-key tokens) when the records
-    carry them, so the vector measures CONTEXT — same-name confounders no
-    longer share the high-IDF name mass (see transcripts.build_entity_records).
+    Uses ``context_tokens`` (text minus name-key tokens), so the vector
+    measures CONTEXT — same-name confounders no longer share the high-IDF
+    name mass (see transcripts.build_entity_records).
     Keyed on (text_hash, name_hash) because context_tokens depend on BOTH
     (see _VEC_KEY); the distinct count is ~the distinct-text count, so the
     reference's embed-each-unique-string-once economics are preserved
     (src/embedding_and_indexing.py:835-912).
     """
-    col = "context_tokens" if "context_tokens" in records.columns else "tokens"
+    col = "context_tokens"
     distinct = records.select(*_VEC_KEY, col).dropDuplicates(_VEC_KEY)
-    return hashed_tf_vectors(distinct, _VEC_KEY, col, cfg.tf_dim).select(
+    return hashed_tf_vectors(distinct, _VEC_KEY, col, C.TF_DIM).select(
         *_VEC_KEY, "vector"
     )
 
@@ -101,10 +102,10 @@ def pair_features(
     """
     cfg = cfg or EngineConfig()
     df = pair_inputs(pairs, records, cfg, vectors, broadcast_dims)
-    return features_from_inputs(df, cfg)
+    return features_from_inputs(df)
 
 
-def _auto_broadcast(records: DataFrame, vectors: DataFrame, cfg: EngineConfig) -> bool:
+def _auto_broadcast(records: DataFrame, cfg: EngineConfig) -> bool:
     """Broadcast-vs-shuffle auto-select for the pair_inputs side table.
 
     Below ``broadcast_max_records`` rows: broadcast unconditionally (the
@@ -115,8 +116,8 @@ def _auto_broadcast(records: DataFrame, vectors: DataFrame, cfg: EngineConfig) -
     forced-broadcast, local[16]) to avoid broadcasting a ~1 GB relation.
     The estimate prices a side row as fixed overhead + 16 B per sparse-
     vector entry + the KMV sketch; one avg-sparsity aggregate over the
-    vectors table (short rows, map-side combined) is paid only above the
-    row floor, where it is noise against the join it sizes.
+    records' context tokens (map-side combined) is paid only above the row
+    floor, where it is noise against the join it sizes.
     ``broadcast_hard_max_records`` bounds the driver-side relation build
     regardless of estimated bytes.
     """
@@ -126,34 +127,22 @@ def _auto_broadcast(records: DataFrame, vectors: DataFrame, cfg: EngineConfig) -
     if n > cfg.broadcast_hard_max_records:
         return False
     # Sparsity estimate WITHOUT executing the vectors plan: on the default
-    # pair_features path `vectors` is the un-materialized hashed-TF build, so
-    # an aggregate over it would run the full TF/IDF job once for this
-    # estimate and again for the join — a hidden extra pass exactly at the
-    # large-corpus sizes where text_vectors is expensive (r5 advisor).
+    # pair_features path the vectors are the un-materialized hashed-TF build,
+    # so an aggregate over them would run the full TF/IDF job once for this
+    # estimate and again for the join.
     # nnz per vector = min(distinct hash buckets, max_entries=64): bounded
     # above by 64 and by the record's distinct-token count, so the cheap
     # records-side proxy min(distinct tokens, 64) is a (slight) OVER-estimate
     # — collisions only shrink nnz — which errs toward NOT broadcasting, the
     # safe direction for a memory budget.
-    tok_col = (
-        "context_tokens" if "context_tokens" in records.columns
-        else ("tokens" if "tokens" in records.columns else None)
+    avg_nnz = (
+        records.agg(
+            F.avg(F.least(F.size(F.array_distinct("context_tokens")), F.lit(64)))
+        ).first()[0]
+        or 0.0
     )
-    if tok_col is not None:
-        avg_nnz = (
-            records.agg(
-                F.avg(F.least(F.size(F.array_distinct(tok_col)), F.lit(64)))
-            ).first()[0]
-            or 0.0
-        )
-    else:  # records without token arrays: fall back to the direct aggregate
-        avg_nnz = (
-            vectors.agg(F.avg(F.size(F.map_keys("vector")))).first()[0] or 0.0
-        )
     est_row = (
-        cfg.broadcast_row_fixed_bytes
-        + 16.0 * avg_nnz
-        + 4.0 * cfg.shingle_sketch_k
+        C.BROADCAST_ROW_FIXED_BYTES + 16.0 * avg_nnz + 4.0 * C.SHINGLE_SKETCH_K
     )
     return n * est_row <= cfg.broadcast_max_bytes
 
@@ -194,7 +183,7 @@ def pair_inputs(
       side table can't live in one executor's memory; a shuffled equi-join
       on conv_id scales with the cluster. This is the 100-TB path. The
       auto-switch costs one count() over records (plus, only above the row
-      floor, one avg-sparsity aggregate over vectors) per stage — amortized
+      floor, one avg-sparsity aggregate over records) per stage — amortized
       by the join it sizes.
     """
     cfg = cfg or EngineConfig()
@@ -204,16 +193,14 @@ def pair_inputs(
     # join (dedup.ngram_jaccard_pairs) that would add a shuffle per pair.
     attrs = records.select(
         *_SIDE_COLS,
-        kmv_sketch_expr(
-            F.col("tokens"), cfg.shingle_k, cfg.shingle_sketch_k
-        ).alias("_sketch")
-        if "tokens" in records.columns
-        else F.lit(None).cast("array<int>").alias("_sketch"),
+        kmv_sketch_expr(F.col("tokens"), C.SHINGLE_K, C.SHINGLE_SKETCH_K).alias(
+            "_sketch"
+        ),
     )
     if vectors is None:
-        vectors = text_vectors(records, cfg)
+        vectors = text_vectors(records)
     if broadcast_dims is None:
-        broadcast_dims = _auto_broadcast(records, vectors, cfg)
+        broadcast_dims = _auto_broadcast(records, cfg)
 
     # ONE side table joined twice through aliases: both joins share the same
     # child plan, so Spark's exchange reuse builds the broadcast hash table
@@ -223,20 +210,17 @@ def pair_inputs(
     # that), so the name_hash leg must be NULL-SAFE — plain equi-join
     # semantics would strip every nameless record's vector. text_hash stays
     # a plain equality (a NULL text_hash means no tokens, hence no vector).
-    if "name_hash" in vectors.columns:
-        vec = vectors.select(
-            F.col("text_hash").alias("_vt"),
-            F.col("name_hash").alias("_vn"),
-            "vector",
-        )
-        side = attrs.join(
-            vec,
-            (F.col("text_hash") == F.col("_vt"))
-            & F.col("name_hash").eqNullSafe(F.col("_vn")),
-            "left",
-        ).drop("_vt", "_vn")
-    else:  # pre-r4 vector tables (text_hash-keyed), e.g. resumed warehouses
-        side = attrs.join(vectors, "text_hash", "left")
+    vec = vectors.select(
+        F.col("text_hash").alias("_vt"),
+        F.col("name_hash").alias("_vn"),
+        "vector",
+    )
+    side = attrs.join(
+        vec,
+        (F.col("text_hash") == F.col("_vt"))
+        & F.col("name_hash").eqNullSafe(F.col("_vn")),
+        "left",
+    ).drop("_vt", "_vn")
     if broadcast_dims:
         side = F.broadcast(side)
     df = (
@@ -286,7 +270,7 @@ def pair_inputs(
         F.when(L("text_hash") == R("text_hash"), F.lit(1.0))
         .otherwise(
             F.coalesce(
-                make_kmv_jaccard_pudf(cfg.shingle_sketch_k)(
+                make_kmv_jaccard_pudf(C.SHINGLE_SKETCH_K)(
                     L("_sketch"), R("_sketch")
                 ),
                 F.lit(0.0),
@@ -303,14 +287,13 @@ def pair_inputs(
     )
 
 
-def features_from_inputs(df: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
+def features_from_inputs(df: DataFrame) -> DataFrame:
     """The light half: compact inputs -> full feature battery (map-only).
 
     Jaro-Winkler (Arrow-batched UDF over the short name keys) and the native
     arithmetic run here, per scoring pass; the wide-input features arrive
     precomputed in ``df`` (see ``pair_inputs``).
     """
-    cfg = cfg or EngineConfig()
 
     def L(c: str):
         return F.col(f"l_{c}")
@@ -338,13 +321,13 @@ def features_from_inputs(df: DataFrame, cfg: EngineConfig | None = None) -> Data
         "year_match",
         year_match_expr(
             L("birth_year"), L("death_year"), R("birth_year"), R("death_year"),
-            cfg.year_tolerance,
+            C.YEAR_TOLERANCE,
         ),
     ).withColumn(
         "year_conflict",
         year_conflict_expr(
             L("birth_year"), L("death_year"), R("birth_year"), R("death_year"),
-            cfg.year_tolerance,
+            C.YEAR_TOLERANCE,
         ),
     )
-    return df.select("left", "right", *cfg.feature_cols)
+    return df.select("left", "right", *C.FEATURE_COLS)

@@ -20,7 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_resolver_spark import config as C
-from entity_resolver_spark.config import EngineConfig
 
 
 @dataclass
@@ -149,16 +148,13 @@ def sweep_threshold(p: np.ndarray, y: np.ndarray) -> tuple[float, float]:
     return ties[len(ties) // 2], best_f1
 
 
-def train(
-    features: DataFrame, labeled: DataFrame, cfg: EngineConfig | None = None
-) -> Model:
+def train(features: DataFrame, labeled: DataFrame) -> Model:
     """Join labeled pairs to their feature rows, collect (small), fit, sweep.
 
     The stratified split discipline (seed 42, reference src/training.py:
     1203-1218) is applied on the collected matrix.
     """
-    cfg = cfg or EngineConfig()
-    cols = cfg.feature_cols
+    cols = C.FEATURE_COLS
     truths = labeled.select(
         F.least("left", "right").alias("left"),
         F.greatest("left", "right").alias("right"),
@@ -182,7 +178,7 @@ def train(
     # positives and negatives independently, take 70% of each — on a skewed
     # label set an unstratified split can starve the validation negatives
     # that calibrate edge_threshold.
-    rng = np.random.RandomState(cfg.seed)
+    rng = np.random.RandomState(C.SEED)
     tr_parts, va_parts = [], []
     for cls in (0.0, 1.0):
         cls_idx = np.flatnonzero((y > 0.5) == (cls > 0.5))
@@ -192,7 +188,7 @@ def train(
         va_parts.append(cls_idx[n_tr_c:])
     tr = np.concatenate(tr_parts)
     va = np.concatenate(va_parts)
-    w, b = fit_logistic(X[tr], y[tr], seed=cfg.seed)
+    w, b = fit_logistic(X[tr], y[tr])
     p_va = 1.0 / (1.0 + np.exp(-np.clip(X[va] @ w + b, -30, 30)))
     t, f1_va = sweep_threshold(p_va, y[va])
     # Edge threshold for clustering: strictly above the match threshold —

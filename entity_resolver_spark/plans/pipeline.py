@@ -63,13 +63,14 @@ def stage_pairs(records: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, dict]
     row (hot blocks and the pairs their split forgoes).
 
     The key battery is materialized once: the skew-guard metric and the
-    split both consume it. This localCheckpoint — like the ones inside the
-    blocking passes — stores blocks on executors only, so an executor loss
-    mid-stage fails the stage. The pipeline commits the stage output as a
-    table, and that commit is the durable checkpoint: a retry re-runs this
-    one stage from the committed ``records``. The CC loop is the exception
-    (unbounded rounds inside one stage); that is what cc_reliable_every is
-    for."""
+    split both consume it, and the split output is materialized before
+    the pair self-join reads it twice. These localCheckpoints — like the
+    ones inside the blocking passes — store blocks on executors only, so an
+    executor loss mid-stage fails the stage. The pipeline commits the stage
+    output as a table, and that commit is the durable checkpoint: a retry
+    re-runs this one stage from the committed ``records``. The CC loop is
+    the exception (unbounded rounds inside one stage); that is what
+    cc_reliable_every is for."""
     blocks = all_blocks(records, cfg).localCheckpoint()
     hb = hot_block_metrics(blocks, cfg).collect()[0]
     guard = {
@@ -78,7 +79,7 @@ def stage_pairs(records: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, dict]
         "hot_rows": int(hb["hot_rows"]),
         "forgone_pairs": int(hb["forgone_pairs"]),
     }
-    pairs = pairs_from_blocks(split_hot_blocks(blocks, cfg, materialized=True))
+    pairs = pairs_from_blocks(split_hot_blocks(blocks, cfg).localCheckpoint())
     return pairs, guard
 
 
@@ -100,9 +101,9 @@ def stage_pair_inputs(
     )
 
 
-def stage_scored(inputs: DataFrame, cfg: EngineConfig, model: Model) -> DataFrame:
+def stage_scored(inputs: DataFrame, model: Model) -> DataFrame:
     """Features and classifier over the joined pair inputs."""
-    return score_pairs(features_from_inputs(inputs, cfg), model)
+    return score_pairs(features_from_inputs(inputs), model)
 
 
 def stage_clusters(
@@ -172,7 +173,7 @@ class ResolutionPipeline:
             "records", lambda: build_entity_records(transcripts), resume
         )
         vectors = self._run_stage(
-            "vectors", lambda: text_vectors(records, cfg), resume
+            "vectors", lambda: text_vectors(records), resume
         )
 
         def build_pairs() -> DataFrame:
@@ -187,7 +188,7 @@ class ResolutionPipeline:
             resume,
         )
         scored = self._run_stage(
-            "scored", lambda: stage_scored(inputs, cfg, model), resume
+            "scored", lambda: stage_scored(inputs, model), resume
         )
         clusters = self._run_stage(
             "clusters",
@@ -251,7 +252,7 @@ class ResolutionPipeline:
             resume=False,
         )
         vectors = self._run_stage(
-            "vectors", lambda: text_vectors(records, cfg), resume=False
+            "vectors", lambda: text_vectors(records), resume=False
         )
 
         def build_fresh_pairs() -> DataFrame:
@@ -259,9 +260,7 @@ class ResolutionPipeline:
             # join AND the split output three times below (semi-join probe,
             # touched expansion, pair join) — materialize both once
             raw_blocks = all_blocks(records, cfg).localCheckpoint()
-            blocks = split_hot_blocks(
-                raw_blocks, cfg, materialized=True
-            ).localCheckpoint()
+            blocks = split_hot_blocks(raw_blocks, cfg).localCheckpoint()
             new_blocks = blocks.join(new_ids, "conv_id", "left_semi")
             touched = (
                 new_blocks.select("block_key").distinct().join(blocks, "block_key")
@@ -270,7 +269,7 @@ class ResolutionPipeline:
             # meet in a touched block may share a t: block that is not
             # touched, so the subsumption stamp's precondition fails — pair
             # without it. No lineage cut needed: `blocks` is checkpointed.
-            cand = pairs_from_blocks(touched.drop("_st"), materialize=False)
+            cand = pairs_from_blocks(touched.drop("_st"))
             return cand.join(
                 old_pairs.select("left", "right"), ["left", "right"], "left_anti"
             )
@@ -280,7 +279,7 @@ class ResolutionPipeline:
             "scored",
             lambda: old_scored.unionByName(
                 stage_scored(
-                    stage_pair_inputs(fresh_pairs, records, vectors, cfg), cfg, model
+                    stage_pair_inputs(fresh_pairs, records, vectors, cfg), model
                 )
             ),
             resume=False,

@@ -71,9 +71,9 @@ def main() -> None:
 
     # --- scoring on covered pairs -----------------------------------------
     model = Model.default()
-    vectors = text_vectors(records, cfg).localCheckpoint()
+    vectors = text_vectors(records).localCheckpoint()
     inputs = pair_inputs(pairs, records, cfg, vectors=vectors).localCheckpoint()
-    feats = features_from_inputs(inputs, cfg)
+    feats = features_from_inputs(inputs)
     scored = score_pairs(feats, model).localCheckpoint()
 
     ev = truths.join(

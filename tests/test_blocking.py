@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from entity_resolver_spark.config import EngineConfig
+from entity_resolver_spark.config import MINHASH_BANDS, EngineConfig
 from entity_resolver_spark.operators.blocking import (
     all_blocks,
     blocking_recall,
@@ -240,10 +240,10 @@ def test_unified_scan_minhash_schema_and_bands(spark, records):
 
     cfg = EngineConfig()
     sh = _shingle_hash_rows(records, cfg)
-    out = minhash_blocks_from_shingle_rows(sh, cfg)
+    out = minhash_blocks_from_shingle_rows(sh)
     assert out.columns == ["conv_id", "block_key", "skey"]
     n_rec = records.select("conv_id").distinct().count()
-    assert out.count() == n_rec * cfg.minhash_bands
+    assert out.count() == n_rec * MINHASH_BANDS
     assert out.where(~F.col("block_key").startswith("m")).count() == 0
 
 
@@ -291,7 +291,7 @@ def test_subsumption_stamp_keeps_pair_set(spark, cap, whitespace_names):
     recs = _stamp_corpus(spark, whitespace_names)
     blocks = all_blocks(recs, cfg).localCheckpoint()
     n_hot = hot_block_metrics(blocks, cfg).collect()[0]["n_hot_blocks"]
-    split = split_hot_blocks(blocks, cfg, materialized=True).localCheckpoint()
+    split = split_hot_blocks(blocks, cfg).localCheckpoint()
 
     stamped = split.where(F.col("_st").isNotNull())
     assert stamped.count() > 0, "the stamp must be exercised"
@@ -306,3 +306,66 @@ def test_subsumption_stamp_keeps_pair_set(spark, cap, whitespace_names):
     off = _pair_set(pairs_from_blocks(split.drop("_st")))
     assert on == off
     assert ("t00", "t01") in on and ("n00", "n01") in on
+
+
+@pytest.fixture(scope="module")
+def family_recall(spark):
+    """True pairs kept by the full key battery and by the battery without
+    each one family, on a dense corpus (12 entities x 20-30 conversations)
+    whose hot blocks the cap of 16 splits."""
+    from entity_resolver_spark import datagen
+    from entity_resolver_spark.operators.blocking import (
+        _anchor_key_arrays,
+        _exact_key_array,
+        _explode_keys,
+        _shingle_hash_rows,
+        minhash_blocks_from_shingle_rows,
+        rare_shingle_blocks,
+    )
+    from entity_resolver_spark.operators.transcripts import build_entity_records
+
+    data = datagen.generate(
+        n_entities=12, convs_per_entity=(20, 30), turns_per_conv=(2, 6), seed=42
+    )
+    records = build_entity_records(
+        datagen.to_spark(spark, data["transcripts"])
+    ).localCheckpoint()
+    truths = (
+        spark.createDataFrame(data["labeled_pairs"])
+        .where(F.col("match"))
+        .select(
+            F.least("left", "right").alias("left"),
+            F.greatest("left", "right").alias("right"),
+        )
+        .dropDuplicates()
+    )
+    cfg = EngineConfig(max_block_size=16)
+    names = _explode_keys(
+        records, [_exact_key_array(), *_anchor_key_arrays()]
+    ).localCheckpoint()
+    sh = _shingle_hash_rows(records, cfg)
+    families = {
+        f: names.where(F.col("block_key").startswith(f"{f}:")) for f in "tia"
+    }
+    families["m"] = minhash_blocks_from_shingle_rows(sh)
+    families["r"] = rare_shingle_blocks(sh, cfg)
+
+    def kept(names_in: str) -> int:
+        blocks = families[names_in[0]]
+        for f in names_in[1:]:
+            blocks = blocks.unionByName(families[f])
+        split = split_hot_blocks(blocks.localCheckpoint(), cfg).localCheckpoint()
+        pairs = pairs_from_blocks(split.drop("_st"))
+        return truths.join(pairs, ["left", "right"], "left_semi").count()
+
+    every = "tiamr"
+    return kept(every), {f: kept(every.replace(f, "")) for f in every}
+
+
+@pytest.mark.parametrize("family", list("tiamr"))
+def test_every_key_family_carries_recall(family_recall, family):
+    """Under hot-block splits no family is subsumed by the others: leaving
+    any one out loses true pairs. (A family's pairs are redundant only in
+    blocks the split leaves intact.)"""
+    every, without = family_recall
+    assert without[family] < every, (family, without[family], every)

@@ -23,3 +23,21 @@ def test_every_config_field_is_read():
                 read.add(node.attr)
     dead = [f.name for f in dataclasses.fields(EngineConfig) if f.name not in read]
     assert dead == [], f"EngineConfig fields nothing reads: {dead}"
+
+
+def test_config_fields_are_the_kept_settings():
+    """Each field is a setting some caller sets: the deployment and tuning
+    levers. Feature-space widths, seeds and cost-model constants stay module
+    constants in config.py — a new field must come with a caller that sets
+    it."""
+    assert [f.name for f in dataclasses.fields(EngineConfig)] == [
+        "rare_shingle_max_df",
+        "rare_shingle_k",
+        "max_block_size",
+        "cc_reliable_every",
+        "enhancement_aggressiveness",
+        "broadcast_max_records",
+        "broadcast_max_bytes",
+        "broadcast_hard_max_records",
+        "min_edge_confidence",
+    ]

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from entity_resolver_spark.config import EngineConfig
+from entity_resolver_spark.config import FEATURE_COLS, EngineConfig
 from entity_resolver_spark.functions.years import year_match_expr
 from entity_resolver_spark.operators.blocking import candidate_pairs
 from entity_resolver_spark.operators.features import pair_features
@@ -15,12 +15,12 @@ def test_feature_columns_and_ranges(spark, records):
     cfg = EngineConfig()
     pairs = candidate_pairs(records)
     feats = pair_features(pairs, records, cfg)
-    assert set(feats.columns) == {"left", "right", *cfg.feature_cols}
+    assert set(feats.columns) == {"left", "right", *FEATURE_COLS}
     mins_maxs = feats.agg(
-        *[F.min(c).alias(f"min_{c}") for c in cfg.feature_cols],
-        *[F.max(c).alias(f"max_{c}") for c in cfg.feature_cols],
+        *[F.min(c).alias(f"min_{c}") for c in FEATURE_COLS],
+        *[F.max(c).alias(f"max_{c}") for c in FEATURE_COLS],
     ).collect()[0]
-    for c in cfg.feature_cols:
+    for c in FEATURE_COLS:
         assert mins_maxs[f"min_{c}"] >= 0.0, c
         assert mins_maxs[f"max_{c}"] <= 1.0, c
 
@@ -55,13 +55,13 @@ def test_broadcast_and_shuffle_join_paths_identical(spark, records):
     pairs = candidate_pairs(records)
     a = pair_features(pairs, records, cfg, broadcast_dims=True)
     b = pair_features(pairs, records, cfg, broadcast_dims=False)
-    cols = ["left", "right", *cfg.feature_cols]
+    cols = ["left", "right", *FEATURE_COLS]
     ra = sorted(a.select(*cols).collect(), key=lambda r: (r["left"], r["right"]))
     rb = sorted(b.select(*cols).collect(), key=lambda r: (r["left"], r["right"]))
     assert len(ra) == len(rb) and len(ra) > 0
     for x, y in zip(ra, rb):
         assert x["left"] == y["left"] and x["right"] == y["right"]
-        for c in cfg.feature_cols:
+        for c in FEATURE_COLS:
             assert x[c] == pytest.approx(y[c], abs=1e-12), c
 
 
@@ -110,7 +110,7 @@ def test_text_vectors_keyed_per_name_variant(spark):
     assert r["a"]["text_hash"] == r["b"]["text_hash"]
     assert r["a"]["name_hash"] != r["b"]["name_hash"]
     assert r["a"]["context_tokens"] != r["b"]["context_tokens"]
-    vecs = text_vectors(records, EngineConfig())
+    vecs = text_vectors(records)
     joined = {
         x["conv_id"]: x["vector"]
         for x in records.select("conv_id", "text_hash", "name_hash")
@@ -229,27 +229,23 @@ def test_auto_broadcast_is_byte_budgeted(spark, records):
     it; hard row ceiling wins regardless of bytes."""
     import dataclasses
 
-    from entity_resolver_spark.operators.features import (
-        _auto_broadcast,
-        text_vectors,
-    )
+    from entity_resolver_spark.operators.features import _auto_broadcast
 
     cfg = EngineConfig()
-    vectors = text_vectors(records, cfg)
     n = records.count()
 
     # below the floor: no byte estimate consulted
-    assert _auto_broadcast(records, vectors, cfg) is True
+    assert _auto_broadcast(records, cfg) is True
 
     # above the floor with a generous byte budget: still broadcast
     tight = dataclasses.replace(cfg, broadcast_max_records=max(1, n - 1))
-    assert _auto_broadcast(records, vectors, tight) is True
+    assert _auto_broadcast(records, tight) is True
 
     # above the floor with a 1-byte budget: shuffle
     tiny = dataclasses.replace(
         cfg, broadcast_max_records=max(1, n - 1), broadcast_max_bytes=1
     )
-    assert _auto_broadcast(records, vectors, tiny) is False
+    assert _auto_broadcast(records, tiny) is False
 
     # hard ceiling beats any budget
     capped = dataclasses.replace(
@@ -257,7 +253,7 @@ def test_auto_broadcast_is_byte_budgeted(spark, records):
         broadcast_max_records=1,
         broadcast_hard_max_records=max(1, n - 1),
     )
-    assert _auto_broadcast(records, vectors, capped) is False
+    assert _auto_broadcast(records, capped) is False
 
     # and the broadcast hint reaches the physical plan. (No negative
     # assertion on the forced-shuffle form: at this corpus size AQE

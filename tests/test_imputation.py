@@ -37,8 +37,8 @@ def test_impute_from_similar_records(spark):
     )
     cfg = EngineConfig()
     records = build_entity_records(df).cache()
-    vectors = text_vectors(records, cfg)
-    blocks = split_hot_blocks(all_blocks(records, cfg), cfg)
+    vectors = text_vectors(records)
+    blocks = split_hot_blocks(all_blocks(records, cfg).localCheckpoint(), cfg)
     attrs = spark.createDataFrame(
         [("a1", "search_catalog"), ("a2", "search_catalog"), ("b1", "fetch_record")],
         ["conv_id", "attr"],
@@ -82,8 +82,8 @@ def test_audit_flags_planted_bad_label(spark):
     )
     cfg = EngineConfig()
     records = build_entity_records(df).cache()
-    vectors = text_vectors(records, cfg)
-    blocks = split_hot_blocks(all_blocks(records, cfg), cfg)
+    vectors = text_vectors(records)
+    blocks = split_hot_blocks(all_blocks(records, cfg).localCheckpoint(), cfg)
     attrs = spark.createDataFrame(
         [("a1", "search_catalog"), ("a2", "search_catalog"),
          ("a3", "search_catalog"), ("a4", "search_catalog"),
@@ -121,8 +121,8 @@ def test_impute_donor_top_k_nearest_wins(spark):
     )
     cfg = EngineConfig()
     records = build_entity_records(df).cache()
-    vectors = text_vectors(records, cfg)
-    blocks = split_hot_blocks(all_blocks(records, cfg), cfg)
+    vectors = text_vectors(records)
+    blocks = split_hot_blocks(all_blocks(records, cfg).localCheckpoint(), cfg)
     attrs = spark.createDataFrame(
         [("d1", "search_catalog"), ("d2", "web_search"), ("d3", "web_search")],
         ["conv_id", "attr"],

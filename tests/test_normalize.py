@@ -109,7 +109,6 @@ def test_downstream_runs_on_working_set_projection(spark, records, labeled):
     dropped. bench.py and the parquet pipeline's column-pruned stage reads
     both rely on this contract — if a downstream operator grows a dependency
     on a text column, this test fails before the bench does."""
-    from entity_resolver_spark.config import EngineConfig
     from entity_resolver_spark.operators.blocking import candidate_pairs
     from entity_resolver_spark.operators.clustering import cluster_records
     from entity_resolver_spark.operators.features import (
@@ -123,7 +122,7 @@ def test_downstream_runs_on_working_set_projection(spark, records, labeled):
 
     def clusters_over(recs):
         pairs = candidate_pairs(recs)
-        vecs = text_vectors(recs, EngineConfig())
+        vecs = text_vectors(recs)
         scored = score_pairs(
             features_from_inputs(pair_inputs(pairs, recs, vectors=vecs)), model
         )

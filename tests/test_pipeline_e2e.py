@@ -178,6 +178,31 @@ def test_pipeline_skew_metric_and_report(spark, transcripts, corpus, tmp_path, t
         assert report["plots"] == []
 
 
+def test_pipeline_side_tables(spark, transcripts, tmp_path, trained):
+    """The preprocessing-parity side tables (string_dict, string_counts,
+    field_hash_mapping) written after a run agree with the committed
+    records."""
+    model, _ = trained
+    pipe = ResolutionPipeline(spark, str(tmp_path / "side"), model=model)
+    pipe.run(transcripts, resume=False)
+    pipe.write_side_tables()
+    records = pipe.wh.read("records")
+    hashes = records.select(F.col("name_hash").alias("hash")).unionByName(
+        records.select(F.col("text_hash").alias("hash"))
+    ).where(F.col("hash").isNotNull())
+
+    string_dict = pipe.wh.read("string_dict")
+    assert string_dict.count() == hashes.distinct().count()
+    assert string_dict.select("hash").distinct().count() == string_dict.count()
+    total = pipe.wh.read("string_counts").agg(F.sum("count")).first()[0]
+    assert total == hashes.count()
+    fields = {
+        r["field"]
+        for r in pipe.wh.read("field_hash_mapping").select("field").distinct().collect()
+    }
+    assert fields and fields <= {"name_key", "norm_text"}
+
+
 def test_pipeline_reliable_checkpoint_wired(spark, transcripts, tmp_path, trained):
     """EngineConfig.cc_reliable_every must reach connected_components through
     the PRODUCT path (r3 verdict: the durable CC feature existed but the

@@ -31,11 +31,11 @@ def test_builders_in_memory_match_pipeline_run(spark, tmp_path):
     cfg, model = EngineConfig(max_block_size=6), Model.default()
 
     records = build_entity_records(transcripts).localCheckpoint()
-    vectors = text_vectors(records, cfg).localCheckpoint()
+    vectors = text_vectors(records).localCheckpoint()
     pairs, guard = stage_pairs(records, cfg)
     pairs = pairs.localCheckpoint()
     inputs = stage_pair_inputs(pairs, records, vectors, cfg).localCheckpoint()
-    scored = stage_scored(inputs, cfg, model).localCheckpoint()
+    scored = stage_scored(inputs, model).localCheckpoint()
     clusters = stage_clusters(records, vectors, pairs, scored, cfg, model)
 
     pipe = ResolutionPipeline(spark, str(tmp_path / "wh"), cfg=cfg, model=model)
