@@ -414,12 +414,10 @@ def q_graph_sessions(spark, sf_dir):
     edges = adj.where(F.col("src").isNotNull() & (F.col("gap") <= 1800)).select(
         "src", "dst"
     )
-    comp = connected_components(edges)
-    sessions = (
-        e.select("user_id", F.col("event_id").cast("string").alias("id"))
-        .join(comp, "id", "left")
-        .select("user_id", F.coalesce("component", "id").alias("sess"))
-    )
+    events = e.select("user_id", F.col("event_id").cast("string").alias("id"))
+    sessions = events.join(
+        connected_components(events.select("id"), edges), "id"
+    ).select("user_id", F.col("component").alias("sess"))
     per_sess = sessions.groupBy("user_id", "sess").agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -505,17 +503,18 @@ def q_er_records(spark, sf_dir):
 def q_er_blocking_recall(spark, sf_dir):
     """Blocking-recall INVARIANT, oracle-checked: every derived true pair
     (primary conversation d{i} and its near-dup variant v{i}) must share a
-    blocking key. Spark emits the true pairs that candidate_pairs covers;
+    blocking key. Spark emits the true pairs that the pairs stage covers;
     the oracle emits ALL true pairs — they hash-equal iff the full multi-pass
     blocker (exact, SNM, MinHash-LSH, anchors, rare-shingle, hot-split)
-    achieves 100% recall on this corpus. Exercises the same operator the old
-    rows-only er_candidate_pairs query ran, now with a pass/fail gate."""
-    from entity_resolver_spark.operators.blocking import candidate_pairs
+    achieves 100% recall on this corpus. The pairs come from the pipeline's
+    own pairs stage."""
+    from entity_resolver_spark.config import EngineConfig
     from entity_resolver_spark.operators.transcripts import build_entity_records
+    from entity_resolver_spark.plans.pipeline import stage_pairs
 
     t = derive_transcripts(spark, sf_dir)
     records = build_entity_records(t)
-    pairs = candidate_pairs(records)
+    pairs = stage_pairs(records, EngineConfig())[0]
     docs = _read(spark, sf_dir, "documents")
     truth = docs.where(F.pmod("doc_id", F.lit(3)) == 0).select(
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("left"),
@@ -542,7 +541,7 @@ def q_simhash_near_dup(spark, sf_dir):
 def q_cluster_size_dist(spark, sf_dir):
     """G1 twin #2: connected components over an ORACLE-REPRODUCIBLE edge set
     (same-language doc pairs with exact 3-gram Jaccard >= 0.6 — the
-    jaccard_near_dup kernel) plus singleton append; output is the cluster
+    jaccard_near_dup kernel), every doc labeled; output is the cluster
     size distribution. DuckDB recomputes the same partition with a recursive
     CTE (min-label propagation) — a second, independent closure algorithm
     cross-validating large-star/small-star, on a different graph shape than
@@ -566,11 +565,10 @@ def q_cluster_size_dist(spark, sf_dir):
             F.col("right").cast("string").alias("dst"),
         )
     )
-    comp = connected_components(edges)
-    members = docs.select(F.col("doc_id").cast("string").alias("id")).join(
-        comp, "id", "left"
-    ).select(F.coalesce("component", "id").alias("c"))
-    sizes = members.groupBy("c").agg(F.count(F.lit(1)).alias("size"))
+    comp = connected_components(
+        docs.select(F.col("doc_id").cast("string").alias("id")), edges
+    )
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     return (
         sizes.groupBy("size")
         .agg(F.count(F.lit(1)).alias("n_clusters"))
@@ -689,17 +687,28 @@ def q_er_clusters(spark, sf_dir):
     * The model is TRAINED IN-QUERY (M1/M3/M4) on labels derived from the
       same d/v construction, then scored and clustered — so this one query
       exercises block -> feature -> train -> threshold-opt -> score ->
-      cluster end to end against ground truth.
+      cluster end to end against ground truth, through the pipeline's own
+      stage builders (plans/pipeline.py).
     """
-    from entity_resolver_spark.operators.blocking import candidate_pairs
-    from entity_resolver_spark.operators.clustering import cluster_records
+    from dataclasses import replace
+
+    from entity_resolver_spark.config import EngineConfig
     from entity_resolver_spark.operators.dedup import (
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
     )
-    from entity_resolver_spark.operators.features import pair_features
-    from entity_resolver_spark.operators.scoring import score_pairs, train
+    from entity_resolver_spark.operators.features import (
+        features_from_inputs,
+        text_vectors,
+    )
+    from entity_resolver_spark.operators.scoring import train
     from entity_resolver_spark.operators.transcripts import build_entity_records
+    from entity_resolver_spark.plans.pipeline import (
+        stage_clusters,
+        stage_pair_inputs,
+        stage_pairs,
+        stage_scored,
+    )
 
     docs = _read(spark, sf_dir, "documents")
     cand = minhash_dedup_pairs(docs).select("left", "right")
@@ -733,8 +742,10 @@ def q_er_clusters(spark, sf_dir):
         )
     )
 
-    pairs = candidate_pairs(records)
-    feats = pair_features(pairs, records).localCheckpoint()
+    cfg = EngineConfig()
+    vectors = text_vectors(records)
+    pairs = stage_pairs(records, cfg)[0]
+    inputs = stage_pair_inputs(pairs, records, vectors, cfg).localCheckpoint()
     labeled = pairs.join(
         truth.select(
             F.col("a").alias("left"), F.col("b").alias("right")
@@ -742,15 +753,24 @@ def q_er_clusters(spark, sf_dir):
         ["left", "right"],
         "left",
     ).select("left", "right", F.coalesce("match", F.lit(False)).alias("match"))
-    model = train(feats, labeled)
-    scored = score_pairs(feats, model)
+    model = train(features_from_inputs(inputs), labeled)
     # Edge threshold = the model's own F1-optimized decision threshold: the
     # config floor (0.65) and the +0.1 edge band are calibrated to the
     # DEFAULT model's probability scale; this in-query model's L2-regularized
     # scale is compressed (the sweep found a separating threshold at ~0.06),
     # and the sweep by construction picks a separating point whenever one
-    # exists on the grid.
-    clusters = cluster_records(records, scored, model.threshold).localCheckpoint()
+    # exists on the grid. stage_clusters filters at the larger of the
+    # config floor and the model's edge threshold, so both are set to it.
+    model.edge_threshold = model.threshold
+    scored = stage_scored(inputs, model)
+    clusters = stage_clusters(
+        records,
+        vectors,
+        pairs,
+        scored,
+        replace(cfg, min_edge_confidence=model.threshold),
+        model,
+    ).localCheckpoint()
     cl = clusters.select("conv_id", "cluster_id")
     co_clustered = (
         truth.join(cl.withColumnRenamed("conv_id", "a"), "a")

@@ -13,6 +13,7 @@ physical cores; see BASELINE.md) and writes BENCH/BASELINE.md.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import sys
@@ -174,13 +175,21 @@ def main() -> None:
     # repeats the whole bench 4x and this untaken-path evidence — already
     # recorded by every default bench run — costs ~5 min per N-side run.)
     # The decision is the engine's own, byte budget included: above the row
-    # floor a row count alone would time the path the engine took.
+    # floor a row count alone would time the path the engine took. The
+    # other path is forced through the same broadcast_* fields: a row floor
+    # of n_records always broadcasts, a hard ceiling of -1 never does.
     auto_bcast = _auto_broadcast(records, cfg)
     if not os.environ.get("SPARK_GRAFT_SKIP_ALT_JOIN"):
+        if auto_bcast:
+            alt_cfg = dataclasses.replace(
+                cfg, broadcast_max_records=-1, broadcast_hard_max_records=-1
+            )
+        else:
+            alt_cfg = dataclasses.replace(cfg, broadcast_max_records=n_records)
         t0 = time.monotonic()
-        pair_inputs(
-            pairs, records, vectors=vectors, broadcast_dims=not auto_bcast
-        ).write.format("noop").mode("overwrite").save()
+        pair_inputs(pairs, records, alt_cfg, vectors=vectors).write.format(
+            "noop"
+        ).mode("overwrite").save()
         timings[
             "er_pair_inputs_smj" if auto_bcast else "er_pair_inputs_bcast"
         ] = round(time.monotonic() - t0, 3)

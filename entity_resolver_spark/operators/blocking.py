@@ -39,7 +39,7 @@ Durability note (cluster scale): the ``localCheckpoint()`` calls in this
 module are LINEAGE cuts, not durability points — blocks live on executors
 and are lost with them. That is safe here because blocking is a single
 pipeline STAGE: the Warehouse stage boundary (plans/pipeline.py writes
-``candidate_pairs`` to parquet via the two-rename commit) is the durable
+the ``pairs`` table to parquet via the two-rename commit) is the durable
 cut, and a mid-stage executor loss merely recomputes this stage from the
 previous stage table, never from raw input. The cuts that would need to
 become Warehouse round-trips if blocking were ever split into separately
@@ -583,12 +583,6 @@ def pairs_from_blocks(blocks: DataFrame) -> DataFrame:
         F.col("a.conv_id").alias("left"),
         F.col("b.conv_id").alias("right"),
     ).dropDuplicates(["left", "right"])
-
-
-def candidate_pairs(records: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
-    cfg = cfg or EngineConfig()
-    blocks = all_blocks(records, cfg).localCheckpoint()
-    return pairs_from_blocks(split_hot_blocks(blocks, cfg).localCheckpoint())
 
 
 def blocking_recall(pairs: DataFrame, labeled: DataFrame) -> float:

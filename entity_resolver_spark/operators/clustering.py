@@ -114,10 +114,9 @@ def _is_star_forest(e: DataFrame) -> bool:
 
 
 def _hashed_edges(edges: DataFrame) -> DataFrame:
-    """(src, dst) string edges -> distinct (u, v) 64-bit surrogate pairs.
-    A collision over 64 bits is negligible and would only merge two
-    clusters (the same accepted policy as before, when the hash lived in a
-    node map); self-loops drop here."""
+    """(src, dst) string edges -> distinct (u, v) 64-bit surrogate pairs;
+    self-loops drop here. A surrogate collision would merge two clusters
+    (see ``_label_components`` for the expected count)."""
     return (
         edges.select(F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -199,7 +198,13 @@ def _converged_star_roots(
 def _label_components(ids: DataFrame, roots: DataFrame) -> DataFrame:
     """Label an (id) universe with its component = lexicographically minimal
     member id. ``roots`` is the converged star forest over xxhash64(id)
-    surrogates; ids absent from it are their own root (singletons)."""
+    surrogates; ids absent from it are their own root (singletons).
+
+    Every id, singletons included, is hashed to a 64-bit ``xxhash64``. Two
+    ids that share a surrogate land in one component, so a collision merges
+    their clusters without an error. At n ids about n^2 / 2^65 colliding
+    pairs are expected: ~0.03 at 10^9 ids, but ~68 at 5 * 10^10 ids, which
+    is within the 100-TB target's record count."""
     labeled = (
         ids.select("id", F.xxhash64("id").alias("_nid"))
         .join(
@@ -216,13 +221,19 @@ def _label_components(ids: DataFrame, roots: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 50, reliable_every: int = 0
+    ids: DataFrame,
+    edges: DataFrame,
+    max_iter: int = 50,
+    reliable_every: int = 0,
 ) -> DataFrame:
-    """edges(src: string, dst: string) -> (id: string, component: string).
+    """Label the caller's distinct ``ids(id: string)`` with their connected
+    component over ``edges(src: string, dst: string)`` -> (id, component).
 
     component = lexicographically-minimal member id of the node's component
-    (deterministic cluster labels). Nodes present only as self-edges are fine;
-    isolated nodes should be appended by the caller (see ``cluster_records``).
+    (deterministic cluster labels); an id no edge touches labels itself.
+    Edge endpoints outside ``ids`` get no output row. ``edges`` is scanned
+    once (the surrogate projection), so the caller's plan needs no lineage
+    cut; the loop runs over the checkpointed surrogates.
 
     ``reliable_every``: every K rounds, cut lineage with a RELIABLE
     ``checkpoint()`` (requires ``sparkContext.setCheckpointDir``) instead of
@@ -231,18 +242,9 @@ def connected_components(
     checkpoints land on the checkpoint filesystem and survive. 0 (default)
     keeps the pure local-mode fast path; at cluster scale pass e.g. 5.
     """
-    # Cut the caller's lineage once up front: the function scans `edges`
-    # twice (surrogate build, id restore) and an iterative algorithm must
-    # never re-evaluate an arbitrary upstream plan per scan.
-    edges = edges.select("src", "dst").localCheckpoint()
     e = _hashed_edges(edges).localCheckpoint()
     roots = _converged_star_roots(e, max_iter, reliable_every)
-    ids = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return _label_components(ids, roots).localCheckpoint()
+    return _label_components(ids, roots)
 
 
 def cluster_records(
@@ -252,15 +254,9 @@ def cluster_records(
     reliable_every: int = 0,
 ) -> DataFrame:
     """Strict clustering (reference _generate_clusters_strict,
-    src/classifying.py:2184-2284): filter edges by confidence, run CC, append
-    singletons (records with no surviving edge form their own cluster).
-
-    The final labeling joins the star forest DIRECTLY against the records'
-    id universe (r6): edge endpoints are always record pairs here, so the
-    separate edge-node relabel + singleton left join of the generic
-    ``connected_components`` collapses into one pass — same output (labels
-    are still the minimal member conv_id; singletons are their own root),
-    one fewer join and no distinct over the edge endpoints.
+    src/classifying.py:2184-2284): filter edges by confidence, then label
+    every record with its component — records with no surviving edge form
+    their own cluster.
 
     ``reliable_every`` is forwarded to the CC loop — the pipeline threads
     ``EngineConfig.cc_reliable_every`` through here so cluster deployments
@@ -269,11 +265,8 @@ def cluster_records(
     edges = scored.where(
         F.col("is_match") & (F.col("proba") >= F.lit(min_edge_confidence))
     ).select(F.col("left").alias("src"), F.col("right").alias("dst"))
-    # One scan of the scored plan (the surrogate projection) — no lineage
-    # cut needed before it; the loop runs over the checkpointed surrogates.
-    e = _hashed_edges(edges).localCheckpoint()
-    roots = _converged_star_roots(e, max_iter=50, reliable_every=reliable_every)
-    ids = records.select(F.col("conv_id").alias("id"))
-    return _label_components(ids, roots).select(
-        F.col("id").alias("conv_id"), F.col("component").alias("cluster_id")
-    )
+    return connected_components(
+        records.select(F.col("conv_id").alias("id")),
+        edges,
+        reliable_every=reliable_every,
+    ).select(F.col("id").alias("conv_id"), F.col("component").alias("cluster_id"))

@@ -36,6 +36,7 @@ from entity_resolver_spark.functions.hashing import (
     shingles_expr,
 )
 from entity_resolver_spark.functions.normalize import normalize_expr, tokens_expr
+from entity_resolver_spark.operators.blocking import pairs_from_blocks
 
 
 SIMHASH_BITS = 60
@@ -104,13 +105,8 @@ def minhash_dedup_pairs(
     sh = toks.select("id", shingles_expr(F.col("_t"), shingle_k).alias("_sh"))
     sig = minhash_signature(sh, "id", "_sh", n_hashes).persist()
     keys = lsh_band_keys(F.col("sig"), n_hashes, bands)
-    blocks = sig.select("id", F.explode(keys).alias("bk"))
-    pairs = (
-        blocks.alias("a")
-        .join(blocks.alias("b"), "bk")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("left"), F.col("b.id").alias("right"))
-        .dropDuplicates(["left", "right"])
+    pairs = pairs_from_blocks(
+        sig.select(F.col("id").alias("conv_id"), F.explode(keys).alias("block_key"))
     )
     l = sig.select(F.col("id").alias("left"), F.col("sig").alias("l_sig"))
     r = sig.select(F.col("id").alias("right"), F.col("sig").alias("r_sig"))

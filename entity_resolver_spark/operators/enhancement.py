@@ -51,7 +51,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_resolver_spark.config import EngineConfig
-from entity_resolver_spark.operators.features import pair_features
+from entity_resolver_spark.operators.features import (
+    features_from_inputs,
+    pair_inputs,
+)
 
 # Aggressiveness presets (reference classifying.py:1993-2010).
 # max_distance=1 makes the transitive pass structurally empty (extended
@@ -169,9 +172,9 @@ def enhance_matches(
         )
 
     # ---- one feature pass over both candidate sets, then split the gates.
-    # pair_features is the classifier's own battery (map-only over a
-    # broadcast/shuffled side join — see operators/features.py); the verify
-    # sets here are tiny relative to the blocked candidate set.
+    # The classifier's own battery (map-only over a broadcast/shuffled side
+    # join — see operators/features.py); the verify sets here are tiny
+    # relative to the blocked candidate set.
     # The two sets are DISJOINT by construction (every endpoint of an
     # extended pair has at least one match edge; singleton candidates touch
     # a record with none), so the tag survives the distinct untouched.
@@ -184,8 +187,8 @@ def enhance_matches(
     )
     if tagged.isEmpty():
         return empty
-    feats = pair_features(
-        tagged.select("left", "right"), records, cfg, vectors=vectors
+    feats = features_from_inputs(
+        pair_inputs(tagged.select("left", "right"), records, cfg, vectors=vectors)
     ).join(tagged, ["left", "right"])
 
     ext_ok = feats.where(

@@ -88,23 +88,6 @@ def text_vectors(records: DataFrame) -> DataFrame:
     )
 
 
-def pair_features(
-    pairs: DataFrame,
-    records: DataFrame,
-    cfg: EngineConfig | None = None,
-    vectors: DataFrame | None = None,
-    broadcast_dims: bool | None = None,
-) -> DataFrame:
-    """pairs(left, right) -> per-pair feature columns.
-
-    Plan shape: pairs ⋈ attrs(left) ⋈ attrs(right) ⋈ vec(left) ⋈ vec(right)
-    -> one select. See ``pair_inputs`` for the broadcast-vs-shuffle policy.
-    """
-    cfg = cfg or EngineConfig()
-    df = pair_inputs(pairs, records, cfg, vectors, broadcast_dims)
-    return features_from_inputs(df)
-
-
 def _auto_broadcast(records: DataFrame, cfg: EngineConfig) -> bool:
     """Broadcast-vs-shuffle auto-select for the pair_inputs side table.
 
@@ -126,9 +109,9 @@ def _auto_broadcast(records: DataFrame, cfg: EngineConfig) -> bool:
         return True
     if n > cfg.broadcast_hard_max_records:
         return False
-    # Sparsity estimate WITHOUT executing the vectors plan: on the default
-    # pair_features path the vectors are the un-materialized hashed-TF build,
-    # so an aggregate over them would run the full TF/IDF job once for this
+    # Sparsity estimate WITHOUT executing the vectors plan: when the caller
+    # passes no vectors they are the un-materialized hashed-TF build, so an
+    # aggregate over them would run the full TF/IDF job once for this
     # estimate and again for the join.
     # nnz per vector = min(distinct hash buckets, max_entries=64): bounded
     # above by 64 and by the record's distinct-token count, so the cheap
@@ -152,7 +135,6 @@ def pair_inputs(
     records: DataFrame,
     cfg: EngineConfig | None = None,
     vectors: DataFrame | None = None,
-    broadcast_dims: bool | None = None,
 ) -> DataFrame:
     """The heavy half of pair featurization: pairs ⋈ side(L) ⋈ side(R), plus
     the features whose INPUTS are wide — text cosine (sparse vectors) and
@@ -167,8 +149,8 @@ def pair_inputs(
     joined+reduced inputs as a stage table — the join build and the
     vector-consuming UDF are paid once per corpus, not once per scoring pass.
 
-    Join strategy (``broadcast_dims=None`` auto-selects, the default —
-    see ``_auto_broadcast``):
+    Join strategy (auto-selected by ``_auto_broadcast`` from the three
+    ``cfg.broadcast_*`` fields):
     * broadcast — while the per-record side fits executor memory
       (unconditionally <= cfg.broadcast_max_records rows; above that, while
       the BYTE estimate n x (fixed + 16B/vector-entry + sketch) stays under
@@ -199,8 +181,6 @@ def pair_inputs(
     )
     if vectors is None:
         vectors = text_vectors(records)
-    if broadcast_dims is None:
-        broadcast_dims = _auto_broadcast(records, cfg)
 
     # ONE side table joined twice through aliases: both joins share the same
     # child plan, so Spark's exchange reuse builds the broadcast hash table
@@ -221,7 +201,7 @@ def pair_inputs(
         & F.col("name_hash").eqNullSafe(F.col("_vn")),
         "left",
     ).drop("_vt", "_vn")
-    if broadcast_dims:
+    if _auto_broadcast(records, cfg):
         side = F.broadcast(side)
     df = (
         pairs.join(side.alias("L"), F.col("left") == F.col("L.conv_id"))

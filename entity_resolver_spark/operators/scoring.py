@@ -72,16 +72,8 @@ def fit_logistic(
     pos_weight: float = C.LR_CLASS_WEIGHT_POS,
     patience: int = C.LR_PATIENCE,
     seed: int = C.SEED,
-    batch_size: int | None = None,
 ) -> tuple[np.ndarray, float]:
-    """GD logistic regression (numpy). Deterministic.
-
-    ``batch_size=None`` (default) is full-batch. A value switches to
-    mini-batch SGD with per-iteration shuffles under seeds derived from the
-    base seed (reference src/training.py:228-233 derives
-    ``seed + iteration``); loss for early stopping is still evaluated
-    full-batch so the stopping criterion is comparable across modes.
-    """
+    """Full-batch GD logistic regression (numpy). Deterministic."""
     rng = np.random.RandomState(seed)
     n, d = X.shape
     w = rng.normal(0, 0.01, d)
@@ -90,26 +82,13 @@ def fit_logistic(
     sw = sw / sw.mean()
     best_loss, best = np.inf, (w.copy(), b)
     stall = 0
-    for it in range(max_iter):
-        if batch_size is not None and batch_size < n:
-            order = np.random.RandomState(seed + it + 1).permutation(n)
-            for s in range(0, n, batch_size):
-                sl = order[s : s + batch_size]
-                zb = np.clip(X[sl] @ w + b, -30, 30)
-                pb = 1.0 / (1.0 + np.exp(-zb))
-                gw = (X[sl].T @ ((pb - y[sl]) * sw[sl])) / len(sl) + l2 * w
-                gb = float(np.mean((pb - y[sl]) * sw[sl]))
-                w -= lr * gw
-                b -= lr * gb
-            z = np.clip(X @ w + b, -30, 30)
-            p = 1.0 / (1.0 + np.exp(-z))
-        else:
-            z = np.clip(X @ w + b, -30, 30)
-            p = 1.0 / (1.0 + np.exp(-z))
-            g_w = (X.T @ ((p - y) * sw)) / n + l2 * w
-            g_b = float(np.mean((p - y) * sw))
-            w -= lr * g_w
-            b -= lr * g_b
+    for _ in range(max_iter):
+        z = np.clip(X @ w + b, -30, 30)
+        p = 1.0 / (1.0 + np.exp(-z))
+        g_w = (X.T @ ((p - y) * sw)) / n + l2 * w
+        g_b = float(np.mean((p - y) * sw))
+        w -= lr * g_w
+        b -= lr * g_b
         loss = float(
             -np.mean(sw * (y * np.log(p + 1e-12) + (1 - y) * np.log(1 - p + 1e-12)))
             + 0.5 * l2 * float(w @ w)
@@ -259,9 +238,13 @@ def _retrain_defaults() -> None:  # pragma: no cover — dev utility
     import os
 
     from entity_resolver_spark import datagen
-    from entity_resolver_spark.operators.blocking import candidate_pairs
-    from entity_resolver_spark.operators.features import pair_features
+    from entity_resolver_spark.config import EngineConfig
+    from entity_resolver_spark.operators.features import (
+        features_from_inputs,
+        text_vectors,
+    )
     from entity_resolver_spark.operators.transcripts import build_entity_records
+    from entity_resolver_spark.plans.pipeline import stage_pair_inputs, stage_pairs
     from entity_resolver_spark.session import get_spark
 
     spark = get_spark("retrain-defaults")
@@ -272,9 +255,10 @@ def _retrain_defaults() -> None:  # pragma: no cover — dev utility
     transcripts = datagen.to_spark(spark, data["transcripts"])
     labeled = spark.createDataFrame(data["labeled_pairs"])
     records = build_entity_records(transcripts).localCheckpoint()
-    pairs = candidate_pairs(records)
-    feats = pair_features(pairs, records)
-    model = train(feats, labeled)
+    cfg = EngineConfig()
+    pairs = stage_pairs(records, cfg)[0]
+    inputs = stage_pair_inputs(pairs, records, text_vectors(records), cfg)
+    model = train(features_from_inputs(inputs), labeled)
     print(model.to_json())
 
 

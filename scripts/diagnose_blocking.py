@@ -16,8 +16,9 @@ from pyspark.sql import functions as F
 
 from entity_resolver_spark import datagen
 from entity_resolver_spark.config import EngineConfig
-from entity_resolver_spark.operators.blocking import all_blocks, candidate_pairs
+from entity_resolver_spark.operators.blocking import all_blocks
 from entity_resolver_spark.operators.transcripts import build_entity_records
+from entity_resolver_spark.plans.pipeline import stage_pairs
 from entity_resolver_spark.session import get_spark
 
 
@@ -35,7 +36,7 @@ def main() -> None:
     labeled = spark.createDataFrame(data["labeled_pairs"])
 
     records = build_entity_records(transcripts).localCheckpoint()
-    pairs = candidate_pairs(records, cfg).localCheckpoint()
+    pairs = stage_pairs(records, cfg)[0].localCheckpoint()
 
     truths = labeled.where("match").select(
         F.least("left", "right").alias("left"),

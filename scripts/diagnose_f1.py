@@ -20,14 +20,17 @@ from pyspark.sql import functions as F
 
 from entity_resolver_spark import datagen
 from entity_resolver_spark.config import EngineConfig
-from entity_resolver_spark.operators.blocking import candidate_pairs
 from entity_resolver_spark.operators.features import (
     features_from_inputs,
-    pair_inputs,
     text_vectors,
 )
-from entity_resolver_spark.operators.scoring import Model, score_pairs
+from entity_resolver_spark.operators.scoring import Model
 from entity_resolver_spark.operators.transcripts import build_entity_records
+from entity_resolver_spark.plans.pipeline import (
+    stage_pair_inputs,
+    stage_pairs,
+    stage_scored,
+)
 from entity_resolver_spark.session import get_spark
 
 
@@ -46,7 +49,7 @@ def main() -> None:
 
     records = build_entity_records(transcripts).localCheckpoint()
     n_records = records.count()
-    pairs = candidate_pairs(records, cfg).localCheckpoint()
+    pairs = stage_pairs(records, cfg)[0].localCheckpoint()
     n_pairs = pairs.count()
 
     truths = labeled.select(
@@ -72,9 +75,9 @@ def main() -> None:
     # --- scoring on covered pairs -----------------------------------------
     model = Model.default()
     vectors = text_vectors(records).localCheckpoint()
-    inputs = pair_inputs(pairs, records, cfg, vectors=vectors).localCheckpoint()
+    inputs = stage_pair_inputs(pairs, records, vectors, cfg).localCheckpoint()
     feats = features_from_inputs(inputs)
-    scored = score_pairs(feats, model).localCheckpoint()
+    scored = stage_scored(inputs, model).localCheckpoint()
 
     ev = truths.join(
         scored.select("left", "right", "proba", "is_match"), ["left", "right"], "left"

@@ -12,15 +12,22 @@ from entity_resolver_spark.operators.clustering import (
 )
 
 
-def _cc_oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
+def _cc_oracle(edges: list[tuple[str, str]], isolated: list[str]) -> dict[str, str]:
     g = nx.Graph()
     g.add_edges_from(edges)
+    g.add_nodes_from(isolated)
     out = {}
     for comp in nx.connected_components(g):
         label = min(comp)
         for n in comp:
             out[n] = label
     return out
+
+
+def _ids(spark, edges: list[tuple[str, str]], isolated: list[str]):
+    """The distinct id set: every edge endpoint plus the isolated ids."""
+    ids = sorted({n for e in edges for n in e} | set(isolated))
+    return spark.createDataFrame([(i,) for i in ids], "id string")
 
 
 @pytest.mark.parametrize(
@@ -34,16 +41,22 @@ def _cc_oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
     ],
 )
 def test_connected_components_matches_networkx(spark, edges):
+    """Every id is labeled: ids no edge touches (one sorting before every
+    node, one after) are singletons labeled by themselves."""
+    isolated = ["0lone", "zz_lone"]
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {
-        r["id"]: r["component"] for r in connected_components(df).collect()
+        r["id"]: r["component"]
+        for r in connected_components(_ids(spark, edges, isolated), df).collect()
     }
-    assert got == _cc_oracle(edges)
+    assert got == _cc_oracle(edges, isolated)
 
 
 def test_connected_components_empty(spark):
     df = spark.createDataFrame([], "src string, dst string")
-    assert connected_components(df).count() == 0
+    assert connected_components(_ids(spark, [], []), df).count() == 0
+    got = connected_components(_ids(spark, [], ["a", "b"]), df).collect()
+    assert {r["id"]: r["component"] for r in got} == {"a": "a", "b": "b"}
 
 
 def test_connected_components_raises_when_not_converged(spark):
@@ -53,7 +66,7 @@ def test_connected_components_raises_when_not_converged(spark):
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(200)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-        connected_components(df, max_iter=1)
+        connected_components(_ids(spark, edges, []), df, max_iter=1)
     views = [t.name for t in spark.catalog.listTables("global_temp")]
     assert not [v for v in views if v.startswith("er_cc_")]
 
@@ -88,26 +101,23 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """reliable_every=K must produce identical components while cutting
     lineage through the fault-tolerant checkpoint dir (cluster-durable path);
     without a checkpoint dir it must refuse loudly."""
-    import networkx as nx
-
-    from entity_resolver_spark.operators.clustering import connected_components
-
     edges = [(f"n{i}", f"n{i+1}") for i in range(0, 40, 2)] + [
         ("n0", "n2"), ("n10", "n12"), ("n30", "n32")
     ]
+    isolated = ["lone"]
+    ids = _ids(spark, edges, isolated)
     df = spark.createDataFrame(edges, ["src", "dst"])
     prev = spark.sparkContext.getCheckpointDir()
     if prev is None:
-        import pytest
-
         with pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(df, reliable_every=2)
+            connected_components(ids, df, reliable_every=2)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     got = {
         r["id"]: r["component"]
-        for r in connected_components(df, reliable_every=2).collect()
+        for r in connected_components(ids, df, reliable_every=2).collect()
     }
     g = nx.Graph(edges)
+    g.add_nodes_from(isolated)
     for comp in nx.connected_components(g):
         labels = {got[n] for n in comp}
         assert len(labels) == 1
@@ -124,7 +134,10 @@ def test_connected_components_celebrity_star(spark):
     n = 20_000
     edges = [("hub", f"leaf{i:05d}") for i in range(n)] + [("x", "y")]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(_ids(spark, edges, []), df).collect()
+    }
     assert len(got) == n + 3
     star_labels = {got["hub"]} | {got[f"leaf{i:05d}"] for i in range(0, n, 997)}
     assert star_labels == {"hub"}

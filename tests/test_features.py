@@ -2,19 +2,29 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
 from entity_resolver_spark.config import FEATURE_COLS, EngineConfig
 from entity_resolver_spark.functions.years import year_match_expr
-from entity_resolver_spark.operators.blocking import candidate_pairs
-from entity_resolver_spark.operators.features import pair_features
+from entity_resolver_spark.operators.features import (
+    features_from_inputs,
+    pair_inputs,
+)
+from entity_resolver_spark.plans.pipeline import stage_pairs
+
+# broadcast_* settings that force each join path of pair_inputs: a row
+# floor no corpus here reaches always broadcasts, a hard ceiling of -1 never
+FORCE_BROADCAST = {"broadcast_max_records": 1 << 40}
+FORCE_SHUFFLE = {"broadcast_max_records": -1, "broadcast_hard_max_records": -1}
 
 
 def test_feature_columns_and_ranges(spark, records):
     cfg = EngineConfig()
-    pairs = candidate_pairs(records)
-    feats = pair_features(pairs, records, cfg)
+    pairs = stage_pairs(records, cfg)[0]
+    feats = features_from_inputs(pair_inputs(pairs, records, cfg))
     assert set(feats.columns) == {"left", "right", *FEATURE_COLS}
     mins_maxs = feats.agg(
         *[F.min(c).alias(f"min_{c}") for c in FEATURE_COLS],
@@ -40,7 +50,7 @@ def test_identical_records_score_one(spark):
     )
     recs = build_entity_records(df)
     pairs = spark.createDataFrame([("p1", "p2")], ["left", "right"])
-    row = pair_features(pairs, recs).collect()[0]
+    row = features_from_inputs(pair_inputs(pairs, recs)).collect()[0]
     assert row["name_jw"] == pytest.approx(1.0)
     assert row["name_lev_sim"] == pytest.approx(1.0)
     assert row["text_cosine"] == pytest.approx(1.0)
@@ -52,9 +62,13 @@ def test_broadcast_and_shuffle_join_paths_identical(spark, records):
     """The auto-selected broadcast fast path and the 100-TB shuffled-join
     path must produce identical feature rows (same pairs, same values)."""
     cfg = EngineConfig()
-    pairs = candidate_pairs(records)
-    a = pair_features(pairs, records, cfg, broadcast_dims=True)
-    b = pair_features(pairs, records, cfg, broadcast_dims=False)
+    pairs = stage_pairs(records, cfg)[0]
+    a = features_from_inputs(
+        pair_inputs(pairs, records, dataclasses.replace(cfg, **FORCE_BROADCAST))
+    )
+    b = features_from_inputs(
+        pair_inputs(pairs, records, dataclasses.replace(cfg, **FORCE_SHUFFLE))
+    )
     cols = ["left", "right", *FEATURE_COLS]
     ra = sorted(a.select(*cols).collect(), key=lambda r: (r["left"], r["right"]))
     rb = sorted(b.select(*cols).collect(), key=lambda r: (r["left"], r["right"]))
@@ -227,8 +241,6 @@ def test_auto_broadcast_is_byte_budgeted(spark, records):
     BROADCAST_* block): unconditional broadcast below the row floor; above
     it, broadcast while the byte ESTIMATE fits the budget, shuffle beyond
     it; hard row ceiling wins regardless of bytes."""
-    import dataclasses
-
     from entity_resolver_spark.operators.features import _auto_broadcast
 
     cfg = EngineConfig()
@@ -261,10 +273,8 @@ def test_auto_broadcast_is_byte_budgeted(spark, records):
     # on its own — the un-hinted form is exercised for output equivalence
     # by the join-path tests, and its physical shape only diverges at
     # side-table sizes no unit test should materialize.)
-    from entity_resolver_spark.operators.features import pair_inputs
-
-    pairs = candidate_pairs(records)
+    pairs = stage_pairs(records, cfg)[0]
     bcast_plan = pair_inputs(
-        pairs, records, cfg, broadcast_dims=True
+        pairs, records, dataclasses.replace(cfg, **FORCE_BROADCAST)
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in bcast_plan

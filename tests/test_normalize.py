@@ -109,7 +109,7 @@ def test_downstream_runs_on_working_set_projection(spark, records, labeled):
     dropped. bench.py and the parquet pipeline's column-pruned stage reads
     both rely on this contract — if a downstream operator grows a dependency
     on a text column, this test fails before the bench does."""
-    from entity_resolver_spark.operators.blocking import candidate_pairs
+    from entity_resolver_spark.config import EngineConfig
     from entity_resolver_spark.operators.clustering import cluster_records
     from entity_resolver_spark.operators.features import (
         features_from_inputs,
@@ -117,11 +117,12 @@ def test_downstream_runs_on_working_set_projection(spark, records, labeled):
         text_vectors,
     )
     from entity_resolver_spark.operators.scoring import Model, score_pairs
+    from entity_resolver_spark.plans.pipeline import stage_pairs
 
     model = Model.default()
 
     def clusters_over(recs):
-        pairs = candidate_pairs(recs)
+        pairs = stage_pairs(recs, EngineConfig())[0]
         vecs = text_vectors(recs)
         scored = score_pairs(
             features_from_inputs(pair_inputs(pairs, recs, vectors=vecs)), model

@@ -7,18 +7,30 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from entity_resolver_spark.operators.blocking import candidate_pairs
-from entity_resolver_spark.operators.features import pair_features
-from entity_resolver_spark.operators.scoring import score_pairs, train
-from entity_resolver_spark.plans.pipeline import ResolutionPipeline, evaluate_pairs
+from entity_resolver_spark.config import EngineConfig
+from entity_resolver_spark.operators.features import features_from_inputs, text_vectors
+from entity_resolver_spark.operators.scoring import train
+from entity_resolver_spark.plans.pipeline import (
+    ResolutionPipeline,
+    evaluate_pairs,
+    stage_pair_inputs,
+    stage_pairs,
+    stage_scored,
+)
+
+
+def _pair_inputs(records):
+    """The pipeline's pairs and pair_inputs stages over ``records``."""
+    cfg = EngineConfig()
+    pairs = stage_pairs(records, cfg)[0].cache()
+    return stage_pair_inputs(pairs, records, text_vectors(records), cfg).cache()
 
 
 @pytest.fixture(scope="module")
 def trained(spark, records, labeled):
-    pairs = candidate_pairs(records).cache()
-    feats = pair_features(pairs, records).cache()
-    model = train(feats, labeled)
-    scored = score_pairs(feats, model).cache()
+    inputs = _pair_inputs(records)
+    model = train(features_from_inputs(inputs), labeled)
+    scored = stage_scored(inputs, model).cache()
     return model, scored
 
 
@@ -33,10 +45,9 @@ def test_pairwise_f1_gate(spark):
     transcripts = datagen.to_spark(spark, data["transcripts"])
     labeled = spark.createDataFrame(data["labeled_pairs"])
     records = build_entity_records(transcripts).cache()
-    pairs = candidate_pairs(records).cache()
-    feats = pair_features(pairs, records).cache()
-    model = train(feats, labeled)
-    scored = score_pairs(feats, model)
+    inputs = _pair_inputs(records)
+    model = train(features_from_inputs(inputs), labeled)
+    scored = stage_scored(inputs, model)
     m = evaluate_pairs(scored, labeled)
     assert m["f1"] >= 0.99, m
 
@@ -91,8 +102,7 @@ def test_train_cross_partitioning_determinism(spark, records, labeled):
     different weights -> false-merge clusters). train() now sorts the
     collected matrix by (left, right) before the seeded split; this pins
     the exact variable that broke."""
-    pairs = candidate_pairs(records)
-    feats = pair_features(pairs, records)
+    feats = features_from_inputs(_pair_inputs(records))
     models = []
     for parts in (8, 200):
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
@@ -208,8 +218,6 @@ def test_pipeline_reliable_checkpoint_wired(spark, transcripts, tmp_path, traine
     the PRODUCT path (r3 verdict: the durable CC feature existed but the
     pipeline never passed it). With a checkpoint dir set, the durable run's
     clusters must equal the default run's."""
-    from entity_resolver_spark.config import EngineConfig
-
     model, _ = trained
     base = ResolutionPipeline(spark, str(tmp_path / "plain"), model=model).run(
         transcripts, resume=False
@@ -232,8 +240,6 @@ def test_pipeline_enhancement_wired(spark, transcripts, tmp_path, trained):
     clusters must equal the baseline's (the reference's exact contract:
     strict clustering filters enhancement back out); the pass must at
     least run and not disturb the pipeline."""
-    from entity_resolver_spark.config import EngineConfig
-
     model, _ = trained
     base = ResolutionPipeline(spark, str(tmp_path / "noenh"), model=model).run(
         transcripts, resume=False
@@ -259,7 +265,6 @@ def test_pipeline_enhancement_reaches_clusters(
     clusters must co-cluster."""
     import dataclasses
 
-    from entity_resolver_spark.config import EngineConfig
     from entity_resolver_spark.plans import pipeline as P
 
     model, _ = trained

@@ -55,7 +55,7 @@ def test_levenshtein_sim(spark):
         assert r["s"] == pytest.approx(expected, abs=1e-12)
 
 
-def test_cosine_expr_and_pudf_match_numpy(spark):
+def test_cosine_expr_matches_numpy(spark):
     rng = np.random.RandomState(42)
     data = [
         (rng.rand(16).tolist(), rng.rand(16).tolist()) for _ in range(20)
